@@ -204,7 +204,41 @@ def test_cli_all_mode_runs_full_plus_incremental(tmp_path, capsys, spark):
     )
     assert out["mode"] == "all"
     assert out["targets"]  # full phase landed tables
+    assert out["incr_status"] == "finished"
     assert out["incr_rows"] > 0  # incremental phase consumed the stream
+
+
+def test_cli_all_mode_stream_timeout_stops_query_and_fails(tmp_path, capsys, monkeypatch):
+    """A stream still running when the wait times out is stopped and
+    reported as "timeout", and the CLI exits nonzero — not reported as
+    though it had finished. Stub session and query: no Spark runs."""
+    import transferdb_spark.modes.full as full
+    import transferdb_spark.session as session
+    import transferdb_spark.streaming.incr as incr
+    from transferdb_spark.__main__ import main
+
+    class NeverEnds:
+        stopped = False
+
+        def awaitTermination(self, timeout):
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    q = NeverEnds()
+    monkeypatch.setattr(session, "get_spark", lambda *a, **kw: None)
+    monkeypatch.setattr(full, "full_migrate", lambda *a, **kw: {"nation": "ok"})
+    monkeypatch.setattr(incr, "stream_events", lambda *a, **kw: None)
+    monkeypatch.setattr(incr, "apply_cdc_stream", lambda *a, **kw: q)
+    wd = tmp_path / "wd"
+    (wd / "events_source").mkdir(parents=True)
+
+    assert main(["--mode", "all", "--workdir", str(wd)]) == 1
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert q.stopped
+    assert out["incr_status"] == "timeout"
+    assert "incr_rows" not in out
 
 
 def test_cli_export_mode(tmp_path, capsys, spark):

@@ -101,6 +101,24 @@ def _live_sink(args):
     )
 
 
+STREAM_TIMEOUT_S = 300
+
+
+def _await_stream(query, out: dict, status_key: str) -> bool:
+    """Wait for an availableNow stream; True when it finished.
+
+    awaitTermination(timeout) returns False when the timeout expires
+    with the query still running. The query is then stopped and
+    ``out[status_key]`` reads "timeout", so the CLI never reports a
+    stream that is still running as finished, nor leaves it running."""
+    if query.awaitTermination(STREAM_TIMEOUT_S):
+        out[status_key] = "finished"
+        return True
+    query.stop()
+    out[status_key] = "timeout"
+    return False
+
+
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     from transferdb_spark.session import get_spark
@@ -108,6 +126,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(f"transferdb-{args.mode}")
     tables = [t for t in args.tables.split(",") if t] or None
     out: dict = {"mode": args.mode}
+    rc = 0
 
     if args.mode == "prepare":
         from transferdb_spark.modes.prepare import prepare_workspace
@@ -450,10 +469,12 @@ def main(argv: list[str] | None = None) -> int:
             os.path.join(args.workdir, "target", "events_incr"),
             os.path.join(args.workdir, "checkpoints", "incr"),
         )
-        q.awaitTermination(300)
-        out["incr_rows"] = spark.read.parquet(
-            os.path.join(args.workdir, "target", "events_incr")
-        ).count()
+        if _await_stream(q, out, "incr_status"):
+            out["incr_rows"] = spark.read.parquet(
+                os.path.join(args.workdir, "target", "events_incr")
+            ).count()
+        else:
+            rc = 1
         # live branch: a redo feed dir + --jdbc-url streams the text
         # path straight into the target database (transactional apply
         # with a persisted SCN checkpoint)
@@ -472,11 +493,13 @@ def main(argv: list[str] | None = None) -> int:
                 _live_sink(args),
                 scn_path,
             )
-            lq.awaitTermination(300)
-            out["redo_scn"] = read_scn_checkpoint(scn_path)
+            if _await_stream(lq, out, "redo_status"):
+                out["redo_scn"] = read_scn_checkpoint(scn_path)
+            else:
+                rc = 1
 
     print(json.dumps(out, default=str))
-    return 0
+    return rc
 
 
 if __name__ == "__main__":

@@ -988,9 +988,11 @@ def _reassemble_minus(toks: DataFrame, covered: DataFrame) -> DataFrame:
     DUPLICATED fraction), joined onto the intact per-doc token
     arrays, and the deletion is one JVM pass per row:
     array_except(sequence(1, n), cov) is hash-set based (O(n + m)),
-    order-preserving on its first argument, so the kept positions
-    come out ascending and the rebuilt text is position-ordered
-    without any sort. Token arrays themselves move through at most
+    and array_sort puts the kept positions in ascending order, so the
+    rebuilt text is position-ordered without relying on the element
+    order array_except returns (Spark documents only "without
+    duplicates"). The sort is per row, over at most n_tokens ints, in
+    the same projection. Token arrays themselves move through at most
     ONE join exchange (none when the covered side broadcasts), never
     exploded.
 
@@ -1006,7 +1008,7 @@ def _reassemble_minus(toks: DataFrame, covered: DataFrame) -> DataFrame:
     seq = F.when(
         F.col("n_tokens") >= 1, F.sequence(F.lit(1), F.col("n_tokens"))
     ).otherwise(empty)
-    kept_pos = F.array_except(seq, F.coalesce(F.col("cov"), empty))
+    kept_pos = F.array_sort(F.array_except(seq, F.coalesce(F.col("cov"), empty)))
     return (
         toks.join(cov, "doc_id", "left")
         .select(
@@ -1039,9 +1041,12 @@ def dup_span_removal(docs: DataFrame, n: int = 10) -> DataFrame:
     ``_reassemble_minus`` for the exact contract.
 
     Relational shape: duplicated spans explode to covered positions
-    (×n fan-out on the dup fraction only), distinct per (doc, pos),
-    anti-join against the exploded token relation, then per-doc
-    ordered reassembly. Shuffles carry positions and single tokens.
+    (×n fan-out on the dup fraction only); ``_reassemble_minus``
+    collect_sets them per doc (one exchange, positions only), joins
+    that set onto the intact per-doc token arrays, and drops the
+    covered positions with array_except + array_sort in one pass per
+    row. No shuffle carries single tokens, and the token stream is
+    never exploded.
     """
     toks, dup = _dup_spans(docs, n)
     # no .distinct(): _reassemble_minus collect_set-dedups per doc in

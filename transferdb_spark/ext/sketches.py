@@ -79,7 +79,12 @@ def cms_heavy_hitters(docs: DataFrame, k: int = 20) -> DataFrame:
     instead of a second pass over the token stream — a cell's count is
     Σ exact(term) over the terms hashing into it, the identical
     integer cms_sketch computes from raw occurrences. Previously the
-    tokenize+explode pipeline ran twice (once per aggregation)."""
+    tokenize+explode pipeline ran twice (once per aggregation).
+
+    The exact-count relation is persisted with cache.qpersist and stays
+    pinned for the life of the session: in a long-lived session, call
+    ``release_query_caches()`` (or ``spark.catalog.clearCache()``)
+    after consuming the result (cache.py documents the contract)."""
     from transferdb_spark.cache import qpersist
 
     toks = _tokens(docs)

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from transferdb_spark.operators.checksum import compare_chunks, shared_chunk_bounds
 from transferdb_spark.operators.diff import dataset_diff, repair_statements
 from transferdb_spark.plans.chunker import elect_split_key, plan_chunks
+from transferdb_spark.state.commit import atomic_write_json
 
 
 @dataclass
@@ -111,8 +112,7 @@ def compare_tables(
             if current.get(str(c)) == previous.get(str(c))
         ]
         os.makedirs(workdir, exist_ok=True)
-        with open(state_path, "w") as fh:
-            json.dump(current, fh)
+        atomic_write_json(state_path, current)
 
     todo = report.rescan_chunks
     if not todo:

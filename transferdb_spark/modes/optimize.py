@@ -14,10 +14,9 @@ Design:
   shuffle (the whole job is read → concat → write). With
   ``layout_cols`` the rewrite instead Z-orders via plans/layout.py —
   one range exchange, same price as any clustering rewrite.
-- The swap is write-to-staging → verify row count → rename. On plain
-  directories the rename window is the non-atomic residue a table
-  format (Delta/Iceberg) would close with one metadata commit — the
-  staging/verify structure maps 1:1 onto that commit.
+- The swap is write-to-staging → verify row count → state/commit
+  swap_dirs; the next call finishes or undoes a swap a crash
+  interrupted (state/commit.recover_swap).
 """
 
 from __future__ import annotations
@@ -28,6 +27,8 @@ import shutil
 
 from pyspark.sql import SparkSession
 from dataclasses import dataclass
+
+from transferdb_spark.state.commit import recover_swap, swap_dirs
 
 
 @dataclass(frozen=True)
@@ -73,12 +74,11 @@ def compact_files(
     """
     staging = path.rstrip("/") + ".__compact_tmp"
     backup = path.rstrip("/") + ".__compact_old"
-    if not os.path.isdir(path) and os.path.isdir(backup):
-        # crash recovery: a previous run renamed path -> backup and died
-        # before staging -> path landed; the data is intact in backup —
-        # restore it before doing anything else (a blind rerun would
-        # find no source and could rmtree the only copy)
-        os.rename(backup, path)
+    # crash recovery: a previous run that died mid-swap is finished or
+    # undone before the source is listed (e.g. path -> backup landed but
+    # staging -> path did not: the backup is restored — a blind rerun
+    # would find no source and could rmtree the only copy)
+    recover_swap(staging, path, {path: backup})
 
     files = _parquet_files(path)
     if not files:
@@ -107,22 +107,6 @@ def compact_files(
     else:
         shaped = df.coalesce(n_out)
 
-    from transferdb_spark.state import table_format as tf
-
-    if tf.HAS_TABLE_FORMAT:
-        # adapter seam: the staging -> backup -> rename swap collapses
-        # to ONE format commit (snapshot isolation makes the
-        # read-then-overwrite of the same table safe, and a torn swap
-        # impossible by construction)
-        tf.atomic_overwrite(shaped, path)
-        return CompactStats(
-            files_before=len(files),
-            files_after=n_out,
-            bytes_total=total,
-            rows=-1,
-        )
-
-    shutil.rmtree(staging, ignore_errors=True)
     writer = shaped.write.mode("overwrite")
     for c in bloom_cols or []:
         writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
@@ -138,17 +122,13 @@ def compact_files(
                 f"compaction verify failed: {rows} staged vs {src_rows} source rows"
             )
 
-    shutil.rmtree(backup, ignore_errors=True)
-    os.rename(path, backup)
-    os.rename(staging, path)
-    # keep the backup until the swapped-in directory proves readable
-    # (footer parse) — only then is the old copy disposable
+    # the staged directory must hold part files before it may replace
+    # the only other copy
+    if not _parquet_files(staging):
+        shutil.rmtree(staging, ignore_errors=True)
+        raise RuntimeError(f"compacted directory for {path} unreadable; original kept")
+    swap_dirs(staging, path, {path: backup})
     files_after = _parquet_files(path)
-    if not files_after:
-        os.rename(path, staging)
-        os.rename(backup, path)
-        raise RuntimeError(f"compacted directory {path} unreadable; original restored")
-    shutil.rmtree(backup, ignore_errors=True)
 
     return CompactStats(
         files_before=len(files),

@@ -18,8 +18,9 @@ exactly its file list — concurrent writers can't tear a read, and
 `read_snapshot(v)` is the engine's `AS OF SCN v`.
 
 This is deliberately a minimal Delta-shaped core: enough for
-consistent compare/migrate semantics on plain parquet, replaced
-wholesale by Delta/Iceberg when the lakehouse provides one.
+consistent compare/migrate semantics on plain parquet. Manifests and
+schema epochs commit through state/commit.commit_json_if_absent, the
+one place a real table format would plug in.
 """
 
 from __future__ import annotations
@@ -31,6 +32,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from transferdb_spark.state.commit import commit_json_if_absent, list_numbered, numbered_path
+
 
 def _versions_dir(base: str) -> str:
     return os.path.join(base, "_versions")
@@ -41,12 +44,7 @@ def _data_dir(base: str) -> str:
 
 
 def list_versions(base: str) -> list[int]:
-    vd = _versions_dir(base)
-    if not os.path.isdir(vd):
-        return []
-    return sorted(
-        int(f[:-5]) for f in os.listdir(vd) if f.endswith(".json") and f[:-5].isdigit()
-    )
+    return list_numbered(_versions_dir(base))
 
 
 def _file_stats(path: str, cols: list[str]) -> dict:
@@ -93,16 +91,6 @@ def write_snapshot(
     any footer — manifest-level scan planning, which is what keeps
     10^6-file tables plannable. Pair with a Z-ordered or sorted
     layout so the stats are actually tight."""
-    from transferdb_spark.state import table_format as tf
-
-    if tf.HAS_TABLE_FORMAT and not list_versions(base):
-        # adapter seam: the staging dir + put-if-absent manifest dance
-        # collapses to ONE format commit; the format's own log carries
-        # versions/stats/time-travel (read side: tf.read_version).
-        # A store that already has manifest versions keeps the manifest
-        # protocol — one protocol per store, never a mixed read/write.
-        (tf.atomic_overwrite if mode == "overwrite" else tf.atomic_append)(df, base)
-        return tf.committed_version(df.sparkSession, base)
     new_files = _write_staging(df, base)
 
     versions = list_versions(base)
@@ -134,40 +122,29 @@ def _write_staging(df: DataFrame, base: str) -> list[str]:
 def _commit_manifest(
     base: str, version: int, files: list, stats: dict, merged_schema: bool = False
 ) -> int:
-    """Atomic put-if-absent manifest commit; returns the version that
-    actually committed.
+    """Put-if-absent manifest commit (state/commit.commit_json_if_absent);
+    returns the version that actually committed — a concurrent writer
+    that took ``version`` first pushes this commit to the next number
+    instead of being clobbered."""
 
-    os.rename silently REPLACES an existing path on POSIX, so two
-    writers computing the same next version would last-wins-clobber a
-    committed manifest (its data dirs becoming orphans). os.link is
-    create-exclusive: the loser gets EEXIST and retries at the next
-    number, so BOTH commits survive as distinct versions."""
-    tmp = os.path.join(_versions_dir(base), f".{uuid.uuid4().hex}.json.tmp")
-    try:
-        while True:
-            manifest = {
-                "version": version,
-                "files": sorted(files),
-                "stats": stats,
-                # wall-clock commit stamp: powers AS-OF-timestamp time
-                # travel (resolve_version_at) — the SCN-to-time mapping
-                # the reference gets from the database
-                "committed_at_ms": int(time.time() * 1000),
-            }
-            if merged_schema:
-                # files in this image do not all share one schema;
-                # readers must union file schemas (sticky from the
-                # evolving merge onward)
-                manifest["merged_schema"] = True
-            with open(tmp, "w") as fh:
-                json.dump(manifest, fh)
-            try:
-                os.link(tmp, os.path.join(_versions_dir(base), f"{version:06d}.json"))
-                return version
-            except FileExistsError:
-                version += 1
-    finally:
-        os.remove(tmp)
+    def manifest(v: int) -> dict:
+        m = {
+            "version": v,
+            "files": sorted(files),
+            "stats": stats,
+            # wall-clock commit stamp: powers AS-OF-timestamp time
+            # travel (resolve_version_at) — the SCN-to-time mapping
+            # the reference gets from the database
+            "committed_at_ms": int(time.time() * 1000),
+        }
+        if merged_schema:
+            # files in this image do not all share one schema;
+            # readers must union file schemas (sticky from the
+            # evolving merge onward)
+            m["merged_schema"] = True
+        return m
+
+    return commit_json_if_absent(_versions_dir(base), version, manifest)
 
 
 def resolve_version_at(base: str, ts_ms: int) -> int:
@@ -184,7 +161,7 @@ def resolve_version_at(base: str, ts_ms: int) -> int:
 
 
 def _manifest(base: str, version: int) -> dict:
-    with open(os.path.join(_versions_dir(base), f"{version:06d}.json")) as fh:
+    with open(numbered_path(_versions_dir(base), version)) as fh:
         return json.load(fh)
 
 
@@ -208,26 +185,10 @@ def read_snapshot(
     [lo, hi] are read (files without stats for col are kept — pruning
     must never drop data it cannot rule out), and the residual filter
     is still applied row-level. Planning cost is O(manifest), zero
-    footer reads.
-
-    Format-armed stores (written by write_snapshot through the
-    table_format seam, so no manifest versions exist at base) read
-    through tf.read_version: the format's own log supplies the version
-    pinning / time travel, its data skipping replaces manifest-stats
-    pruning, and the predicate becomes a residual row filter."""
+    footer reads."""
     from pyspark.sql import functions as F
 
-    from transferdb_spark.state import table_format as tf
-
     versions = list_versions(base)
-    if tf.HAS_TABLE_FORMAT and not versions:
-        if version is not None and as_of_ms is not None:
-            raise ValueError("pass either version or as_of_ms, not both")
-        out = tf.read_version(spark, base, version, timestamp_ms=as_of_ms)
-        if predicate is not None:
-            col, lo, hi = predicate
-            out = out.filter(F.col(col).between(lo, hi))
-        return out
     if not versions:
         raise FileNotFoundError(f"no snapshot versions under {base}")
     if as_of_ms is not None:
@@ -300,31 +261,11 @@ def merge_snapshot(
     At 100 TB the rewrite cost is proportional to the TOUCHED key
     range, not the table — which is why merge targets should be
     written sorted/Z-ordered on the merge key (tight per-file ranges =
-    tight pruning).
-
-    Format-armed stores merge through tf.atomic_merge (the format's
-    own MERGE does the file pruning; scn_col maps to the matched-
-    update condition) — NOT via write_snapshot(mode='overwrite'),
-    which would clobber the stored image. Schema evolution under the
-    format is the format's own enforcement; 'union' requires its
-    autoMerge knob and is refused here rather than half-honored."""
+    tight pruning)."""
     from pyspark.sql import functions as F
 
     versions = list_versions(base)
     if not versions:
-        from transferdb_spark.state import table_format as tf
-
-        if tf.HAS_TABLE_FORMAT and tf.is_format_table(spark, base):
-            if evolution == "union":
-                raise ValueError(
-                    "merge_snapshot: evolution='union' is not supported on a "
-                    "format-armed store — enable the format's own schema "
-                    "evolution instead"
-                )
-            if not batch.where(F.col(key).isNull()).isEmpty():
-                raise ValueError(f"merge_snapshot: NULL values in merge key {key!r}")
-            tf.atomic_merge(spark, batch, base, key, scn_col=scn_col)
-            return tf.committed_version(spark, base)
         return write_snapshot(batch, base, stat_cols=stat_cols)
     man = _manifest(base, versions[-1])
     files, stats = man["files"], man.get("stats", {})
@@ -482,24 +423,12 @@ def pin_schema_epoch(root: str, tables: list[str]) -> int:
         if not versions:
             raise FileNotFoundError(f"table {t} has no snapshot versions under {root}")
         pinned[t] = versions[-1]
-    epochs = sorted(
-        int(f[:-5]) for f in os.listdir(ed) if f.endswith(".json") and f[:-5].isdigit()
-    )
-    epoch = (epochs[-1] + 1) if epochs else 0
-    # same put-if-absent discipline as _commit_manifest: concurrent
+    epochs = list_numbered(ed)
+    # same put-if-absent commit as _commit_manifest: concurrent
     # pinners each get their own epoch number, never a clobber
-    tmp = os.path.join(ed, f".{uuid.uuid4().hex}.json.tmp")
-    try:
-        while True:
-            with open(tmp, "w") as fh:
-                json.dump({"epoch": epoch, "tables": pinned}, fh)
-            try:
-                os.link(tmp, os.path.join(ed, f"{epoch:06d}.json"))
-                return epoch
-            except FileExistsError:
-                epoch += 1
-    finally:
-        os.remove(tmp)
+    return commit_json_if_absent(
+        ed, (epochs[-1] + 1) if epochs else 0, lambda e: {"epoch": e, "tables": pinned}
+    )
 
 
 def read_schema_epoch(
@@ -510,15 +439,13 @@ def read_schema_epoch(
     A write committed to any table AFTER the pin is invisible — the
     engine's schema-wide `AS OF SCN`."""
     ed = os.path.join(root, "_epochs")
-    epochs = sorted(
-        int(f[:-5]) for f in os.listdir(ed) if f.endswith(".json") and f[:-5].isdigit()
-    ) if os.path.isdir(ed) else []
+    epochs = list_numbered(ed)
     if not epochs:
         raise FileNotFoundError(f"no pinned epochs under {root}")
     e = epochs[-1] if epoch is None else epoch
     if e not in epochs:
         raise ValueError(f"epoch {e} not in {epochs}")
-    with open(os.path.join(ed, f"{e:06d}.json")) as fh:
+    with open(numbered_path(ed, e)) as fh:
         pinned = json.load(fh)["tables"]
     return {
         t: read_snapshot(spark, os.path.join(root, t), v) for t, v in pinned.items()
@@ -568,7 +495,7 @@ def vacuum_snapshots(
     dropped_versions = 0
     for v in versions:
         if v not in keep:
-            os.remove(os.path.join(_versions_dir(base), f"{v:06d}.json"))
+            os.remove(numbered_path(_versions_dir(base), v))
             dropped_versions += 1
 
     import shutil

@@ -17,6 +17,8 @@ import json
 import os
 from dataclasses import asdict, dataclass
 
+from transferdb_spark.state.commit import atomic_write_json
+
 WAITING, RUNNING, SUCCESS, FAILED = "WAITING", "RUNNING", "SUCCESS", "FAILED"
 
 
@@ -149,8 +151,7 @@ class StateStore:
         return out
 
     def _flush(self) -> None:
-        with open(self.path, "w") as f:
-            json.dump([asdict(c) for c in self._chunks.values()], f, indent=1)
+        atomic_write_json(self.path, [asdict(c) for c in self._chunks.values()], indent=1)
 
 
 class IncrSyncMeta:
@@ -160,12 +161,12 @@ class IncrSyncMeta:
     (schema, table, global_scn) row per synced table and advances it
     with an UPDATE after each successful apply round).
 
-    Same durability discipline as StateStore (atomic tmp+rename swap)
-    plus an fcntl write lock around the read-modify-write, so the
-    max-wins merge stays correct even if a second writer ever appears
-    (two concurrent streaming queries pointed at one workdir). Reads
-    are always fresh from disk — the store is the source of truth, not
-    a cached dict.
+    Every write goes through state/commit.atomic_write_json (as
+    StateStore's does), under an fcntl write lock around the
+    read-modify-write, so the max-wins merge stays correct even if a
+    second writer ever appears (two concurrent streaming queries
+    pointed at one workdir). Reads are always fresh from disk — the
+    store is the source of truth, not a cached dict.
 
     Failure rows are append-only in a sibling error log (the
     error_log_detail stance): a failed transaction is PERSISTED, never
@@ -212,10 +213,7 @@ class IncrSyncMeta:
             cur = self.highs()
             for t, s in highs.items():
                 cur[t] = max(int(s), cur.get(t, -1))
-            tmp = self.path + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(cur, fh)
-            os.rename(tmp, self.path)
+            atomic_write_json(self.path, cur)
             return cur
 
     def record_errors(self, rows: list[dict]) -> None:

@@ -14,18 +14,17 @@ d·w·batches bytes regardless of stream volume.
 At 100 TB/day: per-batch IO is O(d·w) after the map-side combine
 (every task collapses to ≤ d·w cells before the exchange), landing is
 one tiny file per batch, and `compact_sketch` folds history into one
-d·w-row snapshot so read cost stays flat (on a table format that swap
-is a single atomic commit)."""
+d·w-row snapshot so read cost stays flat."""
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from transferdb_spark.ext.sketches import cms_sketch
+from transferdb_spark.state.commit import BatchDirSwap
 
 
 def ingest_sketch_stream(
@@ -72,21 +71,20 @@ def compact_sketch(spark: SparkSession, target_dir: str) -> int:
     batch directories folded. Read cost afterwards is one d·w-row file
     however long the stream has run.
 
-    Same discipline as streaming/corpus.py compact_corpus: the batch
-    list is FROZEN first and only those directories are read, so a
-    batch landing mid-compaction is untouched (merged next time, never
-    dropped); folded dirs are renamed aside (underscore prefix — the
-    parquet reader skips them) before the snapshot takes the LOWEST
-    folded id, so no reader window ever double-counts, and a crash
-    leaves the aside dirs recoverable. On a table format this whole
-    swap is one atomic commit."""
-    batches = sorted(d for d in os.listdir(target_dir) if d.startswith("batch_id="))
-    if len(batches) <= 1:
+    Same state/commit.BatchDirSwap as streaming/corpus.py
+    compact_corpus: the batch list is FROZEN first and only those
+    directories are read, so a batch landing mid-compaction is
+    untouched (merged next time, never dropped); folded dirs are
+    renamed aside (underscore prefix — the parquet reader skips them)
+    before the snapshot takes the LOWEST folded id, so no reader
+    window ever double-counts, and the next call finishes or undoes a
+    swap a crash interrupted."""
+    swap = BatchDirSwap(target_dir)
+    if len(swap.batches) <= 1:
         return 0
-    min_bid = min(int(d.split("=", 1)[1]) for d in batches)
     merged = (
         spark.read.option("basePath", target_dir)
-        .parquet(*[os.path.join(target_dir, d) for d in batches])
+        .parquet(*[os.path.join(target_dir, d) for d in swap.batches])
         .groupBy("row", "col")
         .agg(F.sum("cnt").alias("cnt"))
         .collect()  # <= d*w rows
@@ -95,14 +93,6 @@ def compact_sketch(spark: SparkSession, target_dir: str) -> int:
         [(int(r["row"]), int(r["col"]), int(r["cnt"])) for r in merged],
         "row int, col int, cnt bigint",
     )
-    tmp = os.path.join(target_dir, "_compact_tmp")
-    snap.coalesce(1).write.mode("overwrite").parquet(tmp)
-    aside = []
-    for d in batches:
-        dst = os.path.join(target_dir, f"_old_{d}")
-        os.rename(os.path.join(target_dir, d), dst)
-        aside.append(dst)
-    os.rename(tmp, os.path.join(target_dir, f"batch_id={min_bid}"))
-    for d in aside:
-        shutil.rmtree(d)
-    return len(batches)
+    snap.coalesce(1).write.mode("overwrite").parquet(swap.staged)
+    swap.commit(min(swap.batch_ids))
+    return len(swap.batches)

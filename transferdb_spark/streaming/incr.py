@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from transferdb_spark.state.commit import BatchDirSwap, atomic_write_json
+
 OP_WHITELIST = ("click", "view", "purchase", "signup", "error")
 
 
@@ -141,8 +143,7 @@ def apply_cdc_stream(
         # keep only this batch's floor: earlier batches are committed
         gate = {"max_scn": new_max, "batch_floors": {bkey: floor}}
         os.makedirs(checkpoint_dir, exist_ok=True)
-        with open(gate_path, "w") as fh:
-            json.dump(gate, fh)
+        atomic_write_json(gate_path, gate)
 
     writer = (
         stream.writeStream.outputMode("append")
@@ -292,41 +293,24 @@ def compact_cdc_log(
     The streaming writer keeps appending new batch dirs afterward
     (its epoch ids come from the checkpoint, not from dir names).
 
-    Crash safety on a plain filesystem: the snapshot is first written
-    to an underscore-prefixed dir (ignored by Spark's partition
-    discovery), old dirs are renamed aside before the snapshot is
-    renamed in, and the aside dirs are removed last. A crash mid-swap
-    leaves `_old_*` dirs to restore from; production deployments on a
-    table format (Delta/Iceberg) get this swap as one atomic commit —
-    the reference's meta-DB transaction analogue
-    (/root/reference/database/meta/meta.go:100-117).
+    The swap is state/commit.BatchDirSwap: the snapshot is written to
+    an underscore-prefixed dir (ignored by Spark's partition
+    discovery), the old dirs are renamed aside, the snapshot is
+    renamed in as the highest folded batch id, and the aside dirs are
+    dropped last. The next compaction call first finishes or undoes a
+    swap a crash interrupted, so no rows stay parked in aside dirs.
 
     Returns {"live_rows", "dirs_removed"}.
     """
-    import shutil
-
-    old_dirs = sorted(
-        d for d in os.listdir(target_dir) if d.startswith("batch_id=")
-    )
-    if len(old_dirs) <= 1:
+    swap = BatchDirSwap(target_dir)
+    if len(swap.batches) <= 1:
         return {"live_rows": None, "dirs_removed": 0}
-    max_bid = max(int(d.split("=", 1)[1]) for d in old_dirs)
 
     snap = cdc_current_state(spark, target_dir, key=key, scn_col=scn_col)
-    tmp = os.path.join(target_dir, "_compact_tmp")
-    snap.write.mode("overwrite").parquet(tmp)
-    live_rows = spark.read.parquet(tmp).count()
-
-    aside = []
-    for d in old_dirs:
-        src = os.path.join(target_dir, d)
-        dst = os.path.join(target_dir, f"_old_{d}")
-        os.rename(src, dst)
-        aside.append(dst)
-    os.rename(tmp, os.path.join(target_dir, f"batch_id={max_bid}"))
-    for d in aside:
-        shutil.rmtree(d)
-    return {"live_rows": live_rows, "dirs_removed": len(old_dirs)}
+    snap.write.mode("overwrite").parquet(swap.staged)
+    live_rows = spark.read.parquet(swap.staged).count()
+    swap.commit(max(swap.batch_ids))
+    return {"live_rows": live_rows, "dirs_removed": len(swap.batches)}
 
 
 def hourly_rollup_stream(stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from transferdb_spark.modes.apply import ApplyResult, apply_transactions
+from transferdb_spark.state.commit import atomic_write_json
 from transferdb_spark.sources.jdbc import JdbcSink
 from transferdb_spark.streaming.redo import (
     RedoStmt,
@@ -61,10 +62,7 @@ def read_scn_checkpoint(path: str) -> int:
 
 
 def write_scn_checkpoint(path: str, scn: int) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"scn": scn}, fh)
-    os.rename(tmp, path)  # single-writer (the streaming query) — atomic swap
+    atomic_write_json(path, {"scn": scn})
 
 
 def _stmt_from_change(c) -> RedoStmt:
