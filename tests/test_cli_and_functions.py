@@ -241,6 +241,74 @@ def test_cli_all_mode_stream_timeout_stops_query_and_fails(tmp_path, capsys, mon
     assert "incr_rows" not in out
 
 
+def test_cli_all_mode_applies_redo_feed_to_jdbc_target(tmp_path, capsys, monkeypatch, spark):
+    """`--mode all --jdbc-url` streams the workdir's redo_feed/ into the
+    live target and reports the per-table SCN checkpoint. A second run
+    over the same feed, with the Spark checkpoint gone, leaves the
+    table unchanged: the per-table checkpoint gates every unit. The
+    full and CDC phases are stubbed."""
+    from tests.test_jdbc_integration import DERBY_DRIVER, _derby_available
+
+    if not _derby_available(spark):
+        pytest.skip("no embedded Derby driver on the Spark classpath")
+    import shutil
+
+    import transferdb_spark.modes.full as full
+    import transferdb_spark.streaming.incr as incr
+    from transferdb_spark.__main__ import main
+    from transferdb_spark.modes.apply import apply_sql
+    from transferdb_spark.sources.jdbc import JdbcSink, JdbcSource
+
+    class Finished:
+        def awaitTermination(self, timeout):
+            return True
+
+    monkeypatch.setattr(full, "full_migrate", lambda *a, **kw: {"nation": "ok"})
+    monkeypatch.setattr(incr, "stream_events", lambda *a, **kw: None)
+    monkeypatch.setattr(incr, "apply_cdc_stream", lambda *a, **kw: Finished())
+    wd = tmp_path / "wd"
+    (wd / "events_source").mkdir(parents=True)
+    spark.range(1).write.parquet(str(wd / "target" / "events_incr"))
+
+    url = f"jdbc:derby:{tmp_path}/clidb;create=true"
+    sink = JdbcSink(url=url, table="", driver=DERBY_DRIVER)
+    assert apply_sql(spark, sink, ["CREATE TABLE T (ID INT, V INT)"]).ok
+    feed = wd / "redo_feed"
+    feed.mkdir()
+    drops = {
+        "log1.json": [
+            (2, "t1", 'insert into "APP"."T"("ID","V") values (\'1\',\'10\');'),
+            (3, "t1", 'insert into "APP"."T"("ID","V") values (\'2\',\'20\');'),
+            (5, "t2", 'update "APP"."T" set "V" = \'25\' where "ID" = \'2\' and "V" = \'20\';'),
+        ],
+        "log2.json": [
+            (7, "t3", 'delete from "APP"."T" where "ID" = \'1\' and "V" = \'10\';'),
+            (8, "t4", 'insert into "APP"."T"("ID","V") values (\'3\',\'30\');'),
+        ],
+    }
+    for name, rows in drops.items():
+        with open(feed / name, "w") as f:
+            for scn, xid, sql in rows:
+                f.write(json.dumps({"scn": scn, "xid": xid, "sql_redo": sql}) + "\n")
+    argv = ["--mode", "all", "--workdir", str(wd), "--jdbc-url", url, "--jdbc-driver", DERBY_DRIVER]
+
+    def state():
+        t = JdbcSource(url=url, table="T", driver=DERBY_DRIVER).load(spark)
+        return {r["ID"]: r["V"] for r in t.collect()}
+
+    out = run_cli(argv, capsys)
+    assert out["incr_rows"] == 1
+    assert out["redo_status"] == "finished"
+    assert out["redo_highs"] == {"T": 8}
+    assert state() == {2: 25, 3: 30}
+
+    shutil.rmtree(wd / "checkpoints" / "redo_apply")
+    out = run_cli(argv, capsys)
+    assert out["redo_status"] == "finished"
+    assert out["redo_highs"] == {"T": 8}
+    assert state() == {2: 25, 3: 30}
+
+
 def test_cli_export_mode(tmp_path, capsys, spark):
     wd = str(tmp_path / "wd")
     out = run_cli(["--mode", "export", "--workdir", wd], capsys)

@@ -424,16 +424,27 @@ def test_live_structure_drift_repaired_by_ansi_fix_sql(spark, sf_dir, tmp_path):
     assert r2.is_clean, r2
 
 
+def _redo_batch(spark, rows):
+    """One (scn, xid, sql_redo) micro-batch, as the redo feed delivers it."""
+    return spark.createDataFrame(rows, "scn long, xid string, sql_redo string")
+
+
+def _status(rows):
+    return {(r["table_name"], r["xid"]): r["status"] for r in rows}
+
+
 def test_redo_translate_ansi_applies_transactionally(spark, tmp_path):
     """The streaming translate path against a LIVE target: Oracle-style
-    redo SQL -> parse_redo -> translate(dialect='ansi') ->
-    apply_transactions executes each txn atomically over JDBC
-    (apply.go:119-233's UPDATE = DELETE+REPLACE txn). A txn with a
+    redo SQL -> parse -> translate(dialect='ansi') -> apply_redo_batch
+    executes each (table, xid) unit atomically over JDBC
+    (apply.go:119-233's UPDATE = DELETE+REPLACE txn). A unit with a
     failing statement must roll back WHOLE."""
     if not _derby_available(spark):
         pytest.skip("no embedded Derby driver on the Spark classpath")
-    from transferdb_spark.modes.apply import apply_sql, apply_transactions
+    from transferdb_spark.modes.apply import apply_sql
     from transferdb_spark.sources.jdbc import JdbcSink, JdbcSource
+    from transferdb_spark.state.store import IncrSyncMeta
+    from transferdb_spark.streaming.live_apply import apply_redo_batch
     from transferdb_spark.streaming.redo import parse_redo, translate_stmt
 
     url = f"jdbc:derby:{tmp_path}/redodb;create=true"
@@ -447,24 +458,19 @@ def test_redo_translate_ansi_applies_transactionally(spark, tmp_path):
         ],
     )
     assert setup.ok, setup.failed
+    meta = IncrSyncMeta(str(tmp_path), "redo")
 
-    redo = {
-        "t1": [
-            'insert into "APP"."ACCTS"("ID","BAL","NOTE") values (\'4\',\'40\',\'d\');',
-            'update "APP"."ACCTS" set "BAL" = \'15\' where "ID" = \'1\' and '
-            '"BAL" = \'10\' and "NOTE" = \'a\';',
-        ],
-        "t2": ['delete from "APP"."ACCTS" where "ID" = \'2\' and "BAL" = \'20\' and "NOTE" = \'b\';'],
-    }
-    txns = [
-        (xid, [s for raw in sqls for s in translate_stmt(parse_redo(raw), dialect="ansi")])
-        for xid, sqls in redo.items()
+    redo = [
+        (2, "t1", 'insert into "APP"."ACCTS"("ID","BAL","NOTE") values (\'4\',\'40\',\'d\');'),
+        (3, "t1", 'update "APP"."ACCTS" set "BAL" = \'15\' where "ID" = \'1\' and '
+         '"BAL" = \'10\' and "NOTE" = \'a\';'),
+        (5, "t2", 'delete from "APP"."ACCTS" where "ID" = \'2\' and "BAL" = \'20\' and "NOTE" = \'b\';'),
     ]
     # txn boundaries live in the executor, not the statement text
-    assert not any("BEGIN" in s or "COMMIT" in s for _, ss in txns for s in ss)
-    res = apply_transactions(spark, sink, txns)
-    assert res.ok, res.failed
-    assert res.applied == ["t1", "t2"]
+    stmts = [s for _, _, raw in redo for s in translate_stmt(parse_redo(raw), dialect="ansi")]
+    assert not any("BEGIN" in s or "COMMIT" in s for s in stmts)
+    res = apply_redo_batch(_redo_batch(spark, redo), sink, meta)
+    assert _status(res) == {("ACCTS", "t1"): "applied", ("ACCTS", "t2"): "applied"}
 
     def state():
         t = JdbcSource(url=url, table="ACCTS", driver=DERBY_DRIVER).load(spark)
@@ -473,60 +479,60 @@ def test_redo_translate_ansi_applies_transactionally(spark, tmp_path):
     assert state() == {1: (15, "a"), 3: (30, "c"), 4: (40, "d")}
 
     # atomicity: valid UPDATE + failing INSERT (NOTE too long) in ONE
-    # txn -> neither lands
+    # unit -> neither lands
     bad = [
-        (
-            "t3",
-            translate_stmt(
-                parse_redo(
-                    'update "APP"."ACCTS" set "BAL" = \'99\' where "ID" = \'3\' and '
-                    '"BAL" = \'30\' and "NOTE" = \'c\';'
-                ),
-                dialect="ansi",
-            )
-            + translate_stmt(
-                parse_redo(
-                    'insert into "APP"."ACCTS"("ID","BAL","NOTE") '
-                    "values ('5','50','way-too-long-note');"
-                ),
-                dialect="ansi",
-            ),
-        )
+        (7, "t3", 'update "APP"."ACCTS" set "BAL" = \'99\' where "ID" = \'3\' and '
+         '"BAL" = \'30\' and "NOTE" = \'c\';'),
+        (8, "t3", 'insert into "APP"."ACCTS"("ID","BAL","NOTE") '
+         "values ('5','50','way-too-long-note');"),
     ]
-    res2 = apply_transactions(spark, sink, bad)
-    assert res2.failed and res2.failed[0][0] == "t3"
+    res2 = apply_redo_batch(_redo_batch(spark, bad), sink, meta, on_error="continue")
+    assert _status(res2) == {("ACCTS", "t3"): "failed"}
     assert state() == {1: (15, "a"), 3: (30, "c"), 4: (40, "d")}  # rollback held
+    assert meta.highs() == {"ACCTS": 5}  # held below the failed unit
+    assert [e["xid"] for e in meta.errors("ACCTS")] == ["t3"]
 
 
-def test_apply_transactions_scn_resume_gate(spark, tmp_path):
-    """Redelivered redo replays idempotently: transactions at or below
-    the checkpointed SCN are skipped, new ones apply, and the returned
-    high-water SCN advances the checkpoint (incr_sync_meta semantics,
-    logminer.go:134-174)."""
+def test_redo_apply_batch_scn_resume_gate(spark, tmp_path):
+    """Redelivered redo replays idempotently: units at or below the
+    table's checkpointed SCN are skipped, new ones apply, and the
+    checkpoint advances (incr_sync_meta semantics,
+    logminer.go:134-174). The target-side meta table works over JDBC
+    too: with the driver-side checkpoint lost, its rows alone stop a
+    re-apply."""
     if not _derby_available(spark):
         pytest.skip("no embedded Derby driver on the Spark classpath")
-    from transferdb_spark.modes.apply import apply_sql, apply_transactions
+    from transferdb_spark.modes.apply import apply_sql
     from transferdb_spark.sources.jdbc import JdbcSink, JdbcSource
+    from transferdb_spark.state.store import IncrSyncMeta
+    from transferdb_spark.streaming.live_apply import apply_redo_batch
 
     url = f"jdbc:derby:{tmp_path}/scndb;create=true"
     sink = JdbcSink(url=url, table="", driver=DERBY_DRIVER)
     assert apply_sql(spark, sink, ["CREATE TABLE KV (K INT, V INT)"]).ok
+    meta = IncrSyncMeta(str(tmp_path), "redo")
 
-    txns = [
-        ("t1", ["INSERT INTO KV VALUES (1, 1)"]),
-        ("t2", ["INSERT INTO KV VALUES (2, 2)"]),
-    ]
-    scns = {"t1": 100, "t2": 200}
-    r1 = apply_transactions(spark, sink, txns, commit_scns=scns)
-    assert r1.applied == ["t1", "t2"] and r1.high_scn == 200
+    def kv_insert(k):
+        return f'insert into "APP"."KV"("K","V") values (\'{k}\',\'{k}\');'
+
+    feed = [(100, "t1", kv_insert(1)), (200, "t2", kv_insert(2))]
+    r1 = apply_redo_batch(_redo_batch(spark, feed), sink, meta, meta_table="incr_sync_meta")
+    assert _status(r1) == {("KV", "t1"): "applied", ("KV", "t2"): "applied"}
+    assert meta.highs() == {"KV": 200}
 
     # full redelivery + one new txn: only the new one applies
-    txns2 = txns + [("t3", ["INSERT INTO KV VALUES (3, 3)"])]
-    r2 = apply_transactions(
-        spark, sink, txns2, commit_scns={**scns, "t3": 300}, resume_scn=r1.high_scn
-    )
-    assert r2.skipped == ["t1", "t2"] and r2.applied == ["t3"]
-    assert r2.high_scn == 300
+    feed2 = feed + [(300, "t3", kv_insert(3))]
+    r2 = apply_redo_batch(_redo_batch(spark, feed2), sink, meta, meta_table="incr_sync_meta")
+    assert _status(r2) == {
+        ("KV", "t1"): "skipped", ("KV", "t2"): "skipped", ("KV", "t3"): "applied",
+    }
+    assert meta.highs() == {"KV": 300}
+
+    # driver-side checkpoint lost: the target meta rows gate every unit
+    fresh = IncrSyncMeta(str(tmp_path / "fresh"), "redo")
+    r3 = apply_redo_batch(_redo_batch(spark, feed2), sink, fresh, meta_table="incr_sync_meta")
+    assert {r["error"] for r in r3} == {"already applied (target meta)"}
+    assert fresh.highs() == {"KV": 300}
 
     t = JdbcSource(url=url, table="KV", driver=DERBY_DRIVER).load(spark)
     assert sorted(r["K"] for r in t.collect()) == [1, 2, 3]  # no duplicates
@@ -534,10 +540,10 @@ def test_apply_transactions_scn_resume_gate(spark, tmp_path):
 
 def test_redo_apply_stream_end_to_end_with_scn_checkpoint(spark, tmp_path):
     """The reference's full `all` loop against LIVE Derby: a JSON
-    redo feed streams through parse -> txn group -> ANSI translate ->
-    transactional JDBC apply; the persisted SCN checkpoint makes a
-    full re-delivery (fresh Spark checkpoint, same feed) idempotent
-    while new transactions still apply."""
+    redo feed streams through parse -> per-table txn group -> ANSI
+    translate -> transactional JDBC apply; the per-table SCN
+    checkpoint makes a full re-delivery (fresh Spark checkpoint, same
+    feed) idempotent while new transactions still apply."""
     if not _derby_available(spark):
         pytest.skip("no embedded Derby driver on the Spark classpath")
     import json as _json
@@ -545,10 +551,8 @@ def test_redo_apply_stream_end_to_end_with_scn_checkpoint(spark, tmp_path):
 
     from transferdb_spark.modes.apply import apply_sql
     from transferdb_spark.sources.jdbc import JdbcSink, JdbcSource
-    from transferdb_spark.streaming.live_apply import (
-        read_scn_checkpoint,
-        run_redo_apply_stream,
-    )
+    from transferdb_spark.state.store import IncrSyncMeta
+    from transferdb_spark.streaming.live_apply import run_redo_apply_stream
 
     url = f"jdbc:derby:{tmp_path}/livedb;create=true"
     sink = JdbcSink(url=url, table="", driver=DERBY_DRIVER)
@@ -556,7 +560,7 @@ def test_redo_apply_stream_end_to_end_with_scn_checkpoint(spark, tmp_path):
 
     feed = tmp_path / "feed"
     feed.mkdir()
-    scn_path = str(tmp_path / "scn.json")
+    meta = IncrSyncMeta(str(tmp_path), "live")
 
     def drop(name, rows):
         with open(feed / name, "w") as f:
@@ -575,7 +579,7 @@ def test_redo_apply_stream_end_to_end_with_scn_checkpoint(spark, tmp_path):
 
     def run(ck):
         q = run_redo_apply_stream(
-            spark, str(feed), str(tmp_path / ck), sink, scn_path, target_schema="APP"
+            spark, str(feed), str(tmp_path / ck), sink, meta, target_schema="APP"
         )
         q.awaitTermination()
 
@@ -586,15 +590,15 @@ def test_redo_apply_stream_end_to_end_with_scn_checkpoint(spark, tmp_path):
         return {r["ID"]: r["V"] for r in tgt.load(spark).collect()}
 
     assert state() == {1: 10, 2: 20, 3: 35}
-    assert read_scn_checkpoint(scn_path) == 6
+    assert meta.highs() == {"T": 6}
 
     # FULL redelivery (fresh Spark checkpoint) + one new log drop:
     # t1/t2 are SCN-gated out, only t3 applies — no duplicate rows
     drop("log2.json", [(8, "t3", 'delete from "APP"."T" where "ID" = \'2\' and "V" = \'20\';')])
     run("ck2")
     assert state() == {1: 10, 3: 35}
-    assert read_scn_checkpoint(scn_path) == 8
-    assert os.path.exists(scn_path)
+    assert meta.highs() == {"T": 8}
+    assert os.path.exists(meta.path)
 
 
 def test_cli_check_against_live_target(spark, sf_dir, tmp_path):

@@ -38,14 +38,7 @@ def _incr_sync_meta(wd):
     return (lambda i: meta.merge({"t": 100 * i})), lambda: IncrSyncMeta(wd, "incr").highs()
 
 
-def _scn_checkpoint(wd):
-    from transferdb_spark.streaming.live_apply import read_scn_checkpoint, write_scn_checkpoint
-
-    path = os.path.join(wd, "redo_scn.json")
-    return (lambda i: write_scn_checkpoint(path, 100 * i)), lambda: read_scn_checkpoint(path)
-
-
-@pytest.mark.parametrize("writer", [_chunk_plan, _incr_sync_meta, _scn_checkpoint])
+@pytest.mark.parametrize("writer", [_chunk_plan, _incr_sync_meta])
 @pytest.mark.parametrize("fault", ["dump_raises", "dies_before_rename"])
 def test_state_writer_fault_keeps_previous_file(tmp_path, monkeypatch, writer, fault):
     """A writer that fails mid-write, or dies between the write and the

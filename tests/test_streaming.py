@@ -522,9 +522,9 @@ def test_redo_lob_assembly_distributed(spark):
 
 
 def test_redo_transaction_grouping(spark):
-    """Changes group into commit-SCN-ordered transactions with
+    """Changes group into per-(table, xid) transaction units with
     SCN-sorted change arrays."""
-    from transferdb_spark.streaming.redo import group_transactions, redo_stream_to_changes
+    from transferdb_spark.streaming.redo import group_table_transactions, redo_stream_to_changes
 
     rows = [
         (5, "tx2", 'insert into "S"."T"("ID") values (3);'),
@@ -536,10 +536,12 @@ def test_redo_transaction_grouping(spark):
     changes = redo_stream_to_changes(df.select("scn", "sql_redo")).join(
         df.select("scn", "xid"), "scn"
     )
-    txns = group_transactions(changes).collect()
-    assert [(t["xid"], t["first_scn"], t["commit_scn"], t["n_changes"]) for t in txns] == [
-        ("tx1", 2, 4, 2),
-        ("tx2", 3, 5, 2),
+    txns = sorted(group_table_transactions(changes).collect(), key=lambda t: t["commit_scn"])
+    assert [
+        (t["table_name"], t["xid"], t["first_scn"], t["commit_scn"], t["n_changes"]) for t in txns
+    ] == [
+        ("T", "tx1", 2, 4, 2),
+        ("T", "tx2", 3, 5, 2),
     ]
     assert [c["scn"] for c in txns[0]["changes"]] == [2, 4]
     assert [c["operation"] for c in txns[0]["changes"]] == ["INSERT", "UPDATE"]
@@ -557,7 +559,7 @@ def test_distributed_apply_sqlite_end_to_end(spark, tmp_path):
 
     from transferdb_spark.streaming.live_apply import (
         apply_changes_distributed,
-        distributed_apply_high_scns,
+        safe_table_watermarks,
     )
     from transferdb_spark.streaming.redo import redo_stream_to_changes
 
@@ -571,7 +573,7 @@ def test_distributed_apply_sqlite_end_to_end(spark, tmp_path):
         (3, "t1", 'insert into "T2"("ID","V") values (\'1\',\'100\');'),
         (5, "t2", 'insert into "T1"("ID","V") values (\'2\',\'20\');'),
         (6, "t2", 'update "T1" set "V" = \'25\' where "ID" = \'2\' and "V" = \'20\';'),
-        # t3 is below the resume SCN -> must be skipped, not re-applied
+        # t3 is below T1's resume SCN -> must be skipped, not re-applied
         (1, "t3", 'insert into "T1"("ID","V") values (\'9\',\'90\');'),
         # t4 hits a missing table -> rolled back whole + quarantined
         (8, "t4", 'insert into "NOPE"("ID") values (\'1\');'),
@@ -584,7 +586,7 @@ def test_distributed_apply_sqlite_end_to_end(spark, tmp_path):
     status_df = apply_changes_distributed(
         changes,
         lambda: sqlite3.connect(db, timeout=60),
-        resume_scn=1,
+        resume_scns={"T1": 1},
         num_partitions=4,
     )
     assert "MapInPandas" in status_df._jdf.queryExecution().executedPlan().toString()
@@ -605,7 +607,7 @@ def test_distributed_apply_sqlite_end_to_end(spark, tmp_path):
         assert sorted(c.execute("SELECT ID, V FROM T1").fetchall()) == [(1, 10), (2, 25)]
         assert c.execute("SELECT ID, V FROM T2").fetchall() == [(1, 100)]
 
-    highs = {r["table_name"]: r["high_scn"] for r in distributed_apply_high_scns(status_df).collect()}
+    highs, _errors = safe_table_watermarks(status)
     assert highs == {"T1": 6, "T2": 3}
 
 
@@ -618,7 +620,7 @@ def test_distributed_apply_stream_with_per_table_scn_resume(spark, tmp_path):
     import sqlite3
 
     from transferdb_spark.state.store import IncrSyncMeta
-    from transferdb_spark.streaming.live_apply import run_redo_apply_stream_dbapi
+    from transferdb_spark.streaming.live_apply import run_redo_apply_stream
 
     db = str(tmp_path / "t.db")
     with sqlite3.connect(db) as c:
@@ -642,7 +644,7 @@ def test_distributed_apply_stream_with_per_table_scn_resume(spark, tmp_path):
     ])
 
     def run(ck):
-        q = run_redo_apply_stream_dbapi(
+        q = run_redo_apply_stream(
             spark, str(feed), str(tmp_path / ck),
             lambda: __import__("sqlite3").connect(db, timeout=60),
             meta, num_partitions=2,
@@ -682,6 +684,7 @@ def test_jdbc_apply_batch_never_collects_change_payload(spark, tmp_path, monkeyp
 
     from transferdb_spark.modes.apply import apply_sql
     from transferdb_spark.sources.jdbc import JdbcSink, JdbcSource
+    from transferdb_spark.state.store import IncrSyncMeta
     from transferdb_spark.streaming.live_apply import apply_redo_batch
 
     url = f"jdbc:derby:{tmp_path}/nocollect;create=true"
@@ -698,11 +701,11 @@ def test_jdbc_apply_batch_never_collects_change_payload(spark, tmp_path, monkeyp
         raise AssertionError("apply path materialized a DataFrame on the driver")
 
     monkeypatch.setattr(DataFrame, "collect", no_collect)
-    res = apply_redo_batch(
-        spark, sink, batch, str(tmp_path / "scn.json"), target_schema="APP"
-    )
+    meta = IncrSyncMeta(str(tmp_path), "redo")
+    res = apply_redo_batch(batch, sink, meta, target_schema="APP")
     monkeypatch.undo()
-    assert res.applied == ["t1", "t2"] and res.high_scn == 4
+    assert [(r["xid"], r["status"]) for r in res] == [("t1", "applied"), ("t2", "applied")]
+    assert meta.highs() == {"T": 4}
     t = JdbcSource(url=url, table="T", driver=DERBY_DRIVER).load(spark)
     assert [(r["ID"], r["V"]) for r in t.collect()] == [(1, 15)]
 
@@ -852,20 +855,6 @@ def test_incr_sync_meta_concurrent_merge(tmp_path):
     assert len(errs) == 1 and errs[0]["error"] == "boom" and "ts" in errs[0]
 
 
-def test_apply_result_safe_scn_contiguous_watermark():
-    """safe_scn never passes the first FAILED commit SCN — the JDBC
-    checkpoint twin of the distributed contiguous-success watermark."""
-    from transferdb_spark.modes.apply import ApplyResult
-
-    r = ApplyResult(applied=["t1", "t3"], high_scn=9,
-                    failed=[("t2", "boom")], failed_scns=[5])
-    assert r.safe_scn == 4
-    ok = ApplyResult(applied=["t1"], high_scn=7)
-    assert ok.safe_scn == 7
-    only_fail = ApplyResult(failed=[("t1", "boom")], failed_scns=[3])
-    assert only_fail.safe_scn == -1  # nothing applied -> no advance
-
-
 def test_distributed_apply_meta_table_makes_retry_exactly_once(spark, tmp_path):
     """The TARGET-side incr_sync_meta table (same-transaction
     checkpoint row) gates a re-run of the exact same units: the second
@@ -942,6 +931,50 @@ def test_ensure_apply_meta_table_probes_usability(tmp_path):
     ro.close()
 
 
+def test_apply_failure_with_empty_message_is_recorded_not_raised():
+    """An exception with an empty message (RuntimeError()) is recorded
+    as a failure by apply_sql and by the redo unit body — it must not
+    escape and fail the whole call. A rollback that raises too is
+    absorbed. No Spark: stub sink and stub connection."""
+    from transferdb_spark.modes.apply import apply_sql
+
+    class Sink:
+        def execute(self, spark, sql):
+            raise RuntimeError()
+
+    res = apply_sql(None, Sink(), ["INSERT INTO T VALUES (1)"])
+    assert res.failed == [("INSERT INTO T VALUES (1)", "RuntimeError")]
+
+    from transferdb_spark.streaming.live_apply import _apply_units
+
+    class Cursor:
+        def execute(self, sql):
+            raise RuntimeError()
+
+        def close(self):
+            pass
+
+    class Conn:
+        closed = False
+
+        def cursor(self):
+            return Cursor()
+
+        def commit(self):
+            raise AssertionError("a failed unit must not commit")
+
+        def rollback(self):
+            raise RuntimeError("no transaction to roll back")
+
+        def close(self):
+            self.closed = True
+
+    conn = Conn()
+    rows = _apply_units([("T", "t1", 5, ["INSERT INTO T VALUES (1);"])], lambda: conn, {}, None)
+    assert [(r["xid"], r["status"], r["error"]) for r in rows] == [("t1", "failed", "RuntimeError")]
+    assert conn.closed
+
+
 def test_distributed_apply_failed_txn_holds_watermark_and_replays(spark, tmp_path):
     """ADVICE(high) regression: a FAILED transaction must be PERSISTED
     to the error log and must hold its table's SCN checkpoint at
@@ -952,7 +985,7 @@ def test_distributed_apply_failed_txn_holds_watermark_and_replays(spark, tmp_pat
     import sqlite3
 
     from transferdb_spark.state.store import IncrSyncMeta
-    from transferdb_spark.streaming.live_apply import run_redo_apply_stream_dbapi
+    from transferdb_spark.streaming.live_apply import run_redo_apply_stream
 
     db = str(tmp_path / "t.db")
     with sqlite3.connect(db) as c:
@@ -975,7 +1008,7 @@ def test_distributed_apply_failed_txn_holds_watermark_and_replays(spark, tmp_pat
     ])
 
     def run(ck):
-        q = run_redo_apply_stream_dbapi(
+        q = run_redo_apply_stream(
             spark, str(feed), str(tmp_path / ck),
             lambda: __import__("sqlite3").connect(db, timeout=60),
             meta=meta, num_partitions=2, on_error="continue",
@@ -1015,7 +1048,7 @@ def test_distributed_apply_stream_halts_on_failure(spark, tmp_path):
     import pytest as _pytest
 
     from transferdb_spark.state.store import IncrSyncMeta
-    from transferdb_spark.streaming.live_apply import run_redo_apply_stream_dbapi
+    from transferdb_spark.streaming.live_apply import run_redo_apply_stream
 
     db = str(tmp_path / "t.db")
     with sqlite3.connect(db) as c:
@@ -1030,7 +1063,7 @@ def test_distributed_apply_stream_halts_on_failure(spark, tmp_path):
                              "sql_redo": 'insert into "NOPE"("ID") values (\'1\');'}) + "\n")
 
     meta = IncrSyncMeta(str(tmp_path), "halt")
-    q = run_redo_apply_stream_dbapi(
+    q = run_redo_apply_stream(
         spark, str(feed), str(tmp_path / "ck"),
         lambda: __import__("sqlite3").connect(db, timeout=60),
         meta=meta, num_partitions=2,

@@ -476,25 +476,23 @@ def main(argv: list[str] | None = None) -> int:
         else:
             rc = 1
         # live branch: a redo feed dir + --jdbc-url streams the text
-        # path straight into the target database (transactional apply
-        # with a persisted SCN checkpoint)
+        # path straight into the target database (per-table
+        # transactional apply with a per-table SCN checkpoint)
         redo_feed = os.path.join(args.workdir, "redo_feed")
         if args.jdbc_url and os.path.isdir(redo_feed):
-            from transferdb_spark.streaming.live_apply import (
-                read_scn_checkpoint,
-                run_redo_apply_stream,
-            )
+            from transferdb_spark.state.store import IncrSyncMeta
+            from transferdb_spark.streaming.live_apply import run_redo_apply_stream
 
-            scn_path = os.path.join(args.workdir, "checkpoints", "redo_scn.json")
+            meta = IncrSyncMeta(args.workdir, "redo")
             lq = run_redo_apply_stream(
                 spark,
                 redo_feed,
                 os.path.join(args.workdir, "checkpoints", "redo_apply"),
                 _live_sink(args),
-                scn_path,
+                meta,
             )
             if _await_stream(lq, out, "redo_status"):
-                out["redo_scn"] = read_scn_checkpoint(scn_path)
+                out["redo_highs"] = meta.highs()
             else:
                 rc = 1
 

@@ -1,6 +1,6 @@
 """Live DDL/fix-SQL apply — execute generated statements against a
 JDBC target (the reference writer's direct-DB branch,
-/root/reference/module/reverse/write.go:40-140 `RWriteDB`; the compare
+module/reverse/write.go:40-140 `RWriteDB`; the compare
 fix flow likewise lands as executable SQL, module/compare/file.go).
 
 Everything here is driver-side: the statement lists are the SMALL
@@ -9,6 +9,10 @@ row data — bulk repair rows go through operators/diff.repair_statements
 streaming to a sink. Per-statement failures are quarantined with the
 statement text (error_log_detail semantics, reference
 reverse.go:210-258): one bad object must not abort a 500-table apply.
+
+Redo (CDC) transactions are not applied here: streaming/live_apply
+owns that loop, with its per-table SCN checkpoint. It shares only
+error_line, the one quarantine-message extractor.
 """
 
 from __future__ import annotations
@@ -23,25 +27,21 @@ from transferdb_spark.sources.jdbc import JdbcSink
 @dataclass
 class ApplyResult:
     applied: list[str] = field(default_factory=list)
-    skipped: list[str] = field(default_factory=list)  # comment-only / SCN-gated
+    skipped: list[str] = field(default_factory=list)  # comment-only
     failed: list[tuple[str, str]] = field(default_factory=list)  # (stmt, error)
-    high_scn: int = -1  # max applied commit SCN (apply_transactions)
-    failed_scns: list[int] = field(default_factory=list)  # commit SCNs of failed txns
 
     @property
     def ok(self) -> bool:
         return not self.failed
 
-    @property
-    def safe_scn(self) -> int:
-        """Contiguous-success checkpoint: never past the first FAILED
-        transaction's commit SCN, so a quarantined txn replays on
-        redelivery instead of being gated out forever (the reference
-        hard-fails the round on any apply error — o2m apply
-        getIncrResult — which is the same guarantee by blunter means)."""
-        if not self.failed_scns:
-            return self.high_scn
-        return min(min(self.failed_scns) - 1, self.high_scn)
+
+def error_line(e: BaseException) -> str:
+    """One-line apply error for a quarantine record. py4j wraps the
+    SQLException — surface the database's own message, not the
+    wrapper's generic first line; an exception with an empty message
+    reports its type name."""
+    msg = str(getattr(e, "java_exception", None) or e).strip()
+    return (msg.splitlines()[0] if msg else type(e).__name__)[:500]
 
 
 def _executable(stmt: str) -> str:
@@ -76,88 +76,10 @@ def apply_sql(
             sink.execute(spark, stmt)
             res.applied.append(stmt)
         except Exception as e:  # noqa: BLE001 — quarantine, don't abort
-            # py4j wraps the SQLException — surface the database's own
-            # message, not the wrapper's generic first line
-            msg = str(getattr(e, "java_exception", None) or e)
-            res.failed.append((stmt, msg.splitlines()[0][:500]))
+            res.failed.append((stmt, error_line(e)))
             if not continue_on_error:
                 break
     return res
-
-
-def apply_transactions(
-    spark: SparkSession,
-    sink: JdbcSink,
-    txns,
-    continue_on_error: bool = True,
-    commit_scns: dict[str, int] | None = None,
-    resume_scn: int = -1,
-) -> ApplyResult:
-    """Apply CDC transactions ATOMICALLY against a live JDBC target —
-    the reference's ordered apply worker executes each redo
-    transaction as one target transaction (UPDATE = DELETE+REPLACE in
-    one txn, /root/reference/module/migrate/sql/oracle/o2m/
-    apply.go:119-233). ``txns`` = [(txn_id, [statements])] in
-    commit-SCN order (streaming/redo.group_transactions produces
-    exactly this shape; translate with dialect='ansi' so txn
-    boundaries stay out of the statement text).
-
-    One connection, autocommit off: a txn whose ANY statement fails is
-    ROLLED BACK whole and quarantined under its txn_id — a half-applied
-    transaction can never land. ApplyResult.applied/failed carry one
-    entry per TRANSACTION.
-
-    Resume (the reference's incr_sync_meta SCN gate, ≥/> dance exact
-    form): pass ``commit_scns`` ({txn_id: commit_scn}) and the
-    checkpointed ``resume_scn`` — transactions with commit_scn <=
-    resume_scn were already applied in a prior run and are SKIPPED
-    (recorded in ApplyResult.skipped), so a redelivered log replays
-    idempotently. ApplyResult.high_scn is the new checkpoint to
-    persist AFTER the run (max applied commit_scn).
-
-    ``txns`` may be ANY iterable — including a lazy generator over
-    DataFrame.toLocalIterator() — of (txn_id, [statements]) or
-    (txn_id, [statements], commit_scn) tuples; the 3-tuple form carries
-    its SCN inline so a streaming caller never has to materialize a
-    whole batch to build the commit_scns dict."""
-    from transferdb_spark.catalog.jdbc_catalog import _connect
-
-    res = ApplyResult()
-    conn = _connect(spark, sink.url, sink.driver, sink.user, sink.password)
-    try:
-        conn.setAutoCommit(False)
-        for item in txns:
-            if len(item) == 3:
-                xid, stmts, scn = item
-            else:
-                xid, stmts = item
-                scn = (commit_scns or {}).get(xid)
-            if scn is not None and scn <= resume_scn:
-                res.skipped.append(xid)
-                continue
-            runnable = [s for s in (_executable(x) for x in stmts) if s]
-            try:
-                st = conn.createStatement()
-                try:
-                    for s in runnable:
-                        st.executeUpdate(s)
-                finally:
-                    st.close()
-                conn.commit()
-                res.applied.append(xid)
-                if scn is not None:
-                    res.high_scn = max(res.high_scn, scn)
-            except Exception as e:  # noqa: BLE001 — rollback + quarantine
-                conn.rollback()
-                msg = str(getattr(e, "java_exception", None) or e)
-                res.failed.append((xid, msg.splitlines()[0][:500]))
-                if scn is not None:
-                    res.failed_scns.append(scn)
-                if not continue_on_error:
-                    break
-        return res
-    finally:
-        conn.close()
 
 
 def apply_reverse_ddl(

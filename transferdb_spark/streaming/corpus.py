@@ -85,7 +85,6 @@ def ingest_documents_stream(
     target_dir: str,
     checkpoint_dir: str,
     text_col: str = "text",
-    available_now: bool = True,
 ):
     """foreachBatch idempotent corpus ingest.
 
@@ -111,16 +110,13 @@ def ingest_documents_stream(
             os.path.join(target_dir, f"batch_id={batch_id}")
         )
 
-    writer = (
+    return (
         stream.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(apply_batch)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="300 milliseconds")
-    return writer.start()
 
 
 def corpus_current_state(spark: SparkSession, target_dir: str) -> DataFrame:

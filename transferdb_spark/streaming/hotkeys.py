@@ -31,7 +31,6 @@ def ingest_sketch_stream(
     stream: DataFrame,
     target_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """foreachBatch: reduce each micro-batch to its partial CMS and
     land it under batch_id=N (overwrite — a replayed batch rewrites
@@ -42,16 +41,13 @@ def ingest_sketch_stream(
             os.path.join(target_dir, f"batch_id={batch_id}")
         )
 
-    writer = (
+    return (
         stream.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(apply_batch)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="300 milliseconds")
-    return writer.start()
 
 
 def sketch_current_state(spark: SparkSession, target_dir: str) -> DataFrame:

@@ -87,7 +87,6 @@ def apply_cdc_stream(
     checkpoint_dir: str,
     key: str = "event_id",
     scn_col: str = "event_id",
-    available_now: bool = True,
 ):
     """foreachBatch idempotent apply — the T4-T6 replacement.
 
@@ -145,16 +144,13 @@ def apply_cdc_stream(
         os.makedirs(checkpoint_dir, exist_ok=True)
         atomic_write_json(gate_path, gate)
 
-    writer = (
+    return (
         stream.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(apply_batch)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="300 milliseconds")  # reference poll cadence
-    return writer.start()
 
 
 def apply_cdc_stream_to_jdbc(
@@ -163,7 +159,6 @@ def apply_cdc_stream_to_jdbc(
     checkpoint_dir: str,
     key: str = "event_id",
     scn_col: str = "event_id",
-    available_now: bool = True,
 ):
     """Stream → MERGE into a live JDBC target — the end-to-end analogue
     of the reference's incr apply loop (o2m/apply.go:119-233: ordered
@@ -193,16 +188,13 @@ def apply_cdc_stream_to_jdbc(
         finally:
             latest.unpersist()
 
-    writer = (
+    return (
         stream.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(apply_batch)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="300 milliseconds")
-    return writer.start()
 
 
 def apply_cdc_stream_to_snapshot(
@@ -212,7 +204,6 @@ def apply_cdc_stream_to_snapshot(
     key: str = "event_id",
     scn_col: str = "event_id",
     stat_cols: list[str] | None = None,
-    available_now: bool = True,
 ):
     """Stream → copy-on-write MERGE into the versioned snapshot store —
     the lakehouse twin of apply_cdc_stream_to_jdbc: each micro-batch
@@ -247,16 +238,13 @@ def apply_cdc_stream_to_snapshot(
         finally:
             latest.unpersist()
 
-    writer = (
+    return (
         stream.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(apply_batch)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="300 milliseconds")
-    return writer.start()
 
 
 def cdc_current_state(

@@ -1,32 +1,41 @@
-"""`all`-mode LIVE sink: redo-SQL micro-batches applied to a JDBC
-target transactionally, with a persisted SCN checkpoint.
+"""`all`-mode LIVE sink: redo-SQL micro-batches applied to a live
+target transactionally, with a per-table SCN checkpoint.
 
 This is the reference's full incremental loop
-(/root/reference/module/migrate/sql/oracle/o2m/incr.go:61-247) on
-Structured Streaming: each micro-batch of (scn, xid, sql_redo) rows is
-parsed executor-side (streaming/redo.redo_stream_to_changes,
-mapInPandas), grouped into commit-SCN-ordered transactions
-(group_transactions), translated to the target dialect
-(translate_stmt) and executed one JDBC TRANSACTION per redo
-transaction (modes/apply.apply_transactions — rollback-whole,
-commit-SCN resume gate). The SCN high-water persists next to the
-Spark checkpoint, so a redelivered batch (or a whole re-run over the
-same feed) replays idempotently — the incr_sync_meta semantics.
+(module/migrate/sql/oracle/o2m/incr.go:61-247) on Structured
+Streaming, with ONE loop and ONE per-batch body (apply_redo_batch):
 
-Two apply executors, by what the target connection can be:
+1. parse each (scn, xid, sql_redo) row executor-side
+   (streaming/redo.redo_stream_to_changes, mapInPandas) and drop
+   ERROR rows;
+2. group into per-(table, xid) units (group_table_transactions) and
+   translate them to the target dialect (translate_transactions_df);
+3. repartition the units by table, commit-SCN-sorted within each
+   partition — the reference's per-table worker map
+   (module/migrate/sql/oracle/o2m/apply.go:58-233);
+4. gate each unit on the per-table SCN checkpoint
+   (state.store.IncrSyncMeta, the incr_sync_meta twin);
+5. apply each unit as one target transaction (_apply_unit —
+   rollback-whole, UPDATE = DELETE+REPLACE in one txn);
+6. advance each table's SCN to its contiguous-success watermark
+   (safe_table_watermarks) and append failures to the error log;
+7. halt on any failure when on_error='halt'.
 
-- apply_redo_batch — JDBC target (Derby-tested). JDBC lives behind
-  py4j, which only exists on the DRIVER, so the statements must cross
-  it; but parse AND translate run executor-side (mapInPandas) and the
-  driver pulls translated transactions one PARTITION at a time via
-  toLocalIterator — it never materializes a batch's change payload.
-- apply_changes_distributed — DBAPI target (any Python driver:
-  psycopg2/pymysql/sqlite3…). Fully executor-side: per-table apply
-  units repartitioned by table, commit-SCN-ordered within each
-  partition, applied through per-partition connections; the driver
-  sees only the tiny (table, xid, scn, status) rows. This mirrors the
-  reference's per-table worker map + per-table SCN checkpoint
-  (/root/reference/module/migrate/sql/oracle/o2m/apply.go:58-233).
+Two transports for step 5, chosen by the target's type:
+
+- JdbcSink — applied DRIVER-side. JDBC lives behind py4j, which only
+  exists on the driver, so the statements must cross it; the driver
+  pulls translated units one PARTITION at a time via toLocalIterator
+  (never collect()) and applies them over one connection wrapped in a
+  DBAPI-shaped adapter.
+- a zero-argument DBAPI factory (psycopg2/pymysql/sqlite3…) — applied
+  EXECUTOR-side by apply_changes_distributed (mapInPandas), one
+  connection per partition; the driver sees only the tiny
+  (table, xid, scn, status) rows.
+
+A source transaction touching two tables therefore commits as two
+target transactions on either transport, exactly as the reference
+relaxes cross-table atomicity.
 
 The structured MERGE path (streaming/incr.py) remains the preferred
 sink when before/after images are available; this is the text-redo
@@ -35,114 +44,25 @@ path the reference runs when they are not.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from transferdb_spark.modes.apply import ApplyResult, apply_transactions
-from transferdb_spark.state.commit import atomic_write_json
+from transferdb_spark.modes.apply import error_line
 from transferdb_spark.sources.jdbc import JdbcSink
+from transferdb_spark.state.store import IncrSyncMeta
 from transferdb_spark.streaming.redo import (
-    RedoStmt,
     group_table_transactions,
-    group_transactions,
     redo_stream_to_changes,
-    translate_stmt,
     translate_transactions_df,
 )
 
-
-def read_scn_checkpoint(path: str) -> int:
-    if not os.path.exists(path):
-        return -1
-    with open(path) as fh:
-        return int(json.load(fh)["scn"])
-
-
-def write_scn_checkpoint(path: str, scn: int) -> None:
-    atomic_write_json(path, {"scn": scn})
-
-
-def _stmt_from_change(c) -> RedoStmt:
-    """Rebuild a RedoStmt from one grouped change struct."""
-    return RedoStmt(
-        operation=c["operation"],
-        schema=c["schema_name"],
-        table=c["table_name"],
-        data=json.loads(c["data_json"]),
-        before=json.loads(c["before_json"]),
-    )
-
-
-def apply_redo_batch(
-    spark: SparkSession,
-    sink: JdbcSink,
-    batch: DataFrame,
-    scn_path: str,
-    target_schema: str = "",
-    dialect: str = "ansi",
-    on_error: str = "continue",
-) -> ApplyResult:
-    """One micro-batch: parse -> group -> translate (all executor-side)
-    -> transactional apply gated on the persisted SCN; advances the
-    checkpoint to the CONTIGUOUS-SUCCESS watermark AFTER the apply
-    (crash before the write = the batch replays, and the SCN gate +
-    rollback-whole txns make the replay idempotent; a FAILED txn holds
-    the watermark below its commit SCN and is persisted to
-    ``scn_path + '.errors.jsonl'`` so it replays rather than being
-    silently gated out). ``on_error='halt'`` raises after persisting —
-    the reference's hard-fail stance.
-
-    Driver memory is bounded by ONE shuffle partition of translated
-    statement text: toLocalIterator pulls partitions sequentially, so
-    a hot batch's full change payload never lands on the driver — only
-    the SQL the driver's JDBC connection must ship anyway, a partition
-    at a time."""
-    changes = redo_stream_to_changes(batch.select("scn", "sql_redo")).join(
-        batch.select("scn", "xid"), "scn"
-    )
-    changes = changes.filter("operation <> 'ERROR'")
-    txn_sql = translate_transactions_df(
-        group_transactions(changes), target_schema, dialect=dialect
-    ).orderBy("commit_scn", "xid")
-
-    def txn_iter():
-        for row in txn_sql.toLocalIterator():
-            yield row["xid"], list(row["stmts"]), int(row["commit_scn"])
-
-    resume = read_scn_checkpoint(scn_path)
-    res = apply_transactions(spark, sink, txn_iter(), resume_scn=resume)
-    if res.failed:
-        # error_log_detail stance: persist every failure occurrence
-        # before deciding how far the checkpoint may advance
-        import time as _t
-
-        with open(scn_path + ".errors.jsonl", "a") as fh:
-            for (xid, err), scn in zip(res.failed, res.failed_scns or [-1] * len(res.failed)):
-                fh.write(
-                    json.dumps({"xid": xid, "commit_scn": scn, "error": err, "ts": _t.time()})
-                    + "\n"
-                )
-    # contiguous-success watermark — never advance past a failed txn
-    if res.safe_scn > resume:
-        write_scn_checkpoint(scn_path, res.safe_scn)
-    if res.failed and on_error == "halt":
-        raise RuntimeError(
-            f"redo apply failed for {len(res.failed)} transaction(s); "
-            f"first: xid={res.failed[0][0]} error={res.failed[0][1]}"
-        )
-    return res
-
-
-# ---------------------------------------------------------------------------
-# fully distributed apply — DBAPI targets
-
+APPLY_STATUS_COLUMNS = ["table_name", "xid", "commit_scn", "status", "error", "worker_pid"]
 APPLY_STATUS_SCHEMA = (
     "table_name string, xid string, commit_scn long, status string, "
     "error string, worker_pid long"
 )
+ALREADY_APPLIED = "already applied (target meta)"
 
 
 def _sql_str(v: str) -> str:
@@ -160,6 +80,46 @@ def _safe_rollback(conn) -> None:
         conn.rollback()
     except Exception:  # noqa: BLE001 — nothing to roll back
         pass
+
+
+class _JdbcCursor:
+    def __init__(self, statement):
+        self._st = statement
+        self._rs = None
+
+    def execute(self, sql: str) -> None:
+        self._rs = self._st.getResultSet() if self._st.execute(sql) else None
+
+    def fetchone(self):
+        if self._rs is None or not self._rs.next():
+            return None
+        n = self._rs.getMetaData().getColumnCount()
+        return tuple(self._rs.getObject(i) for i in range(1, n + 1))
+
+    def close(self) -> None:
+        self._st.close()
+
+
+class _JdbcConnection:
+    """DBAPI-shaped view of one py4j java.sql.Connection (autocommit
+    off), so the JDBC transport runs the same unit body as DBAPI
+    targets."""
+
+    def __init__(self, conn):
+        conn.setAutoCommit(False)
+        self._conn = conn
+
+    def cursor(self) -> _JdbcCursor:
+        return _JdbcCursor(self._conn.createStatement())
+
+    def commit(self) -> None:
+        self._conn.commit()
+
+    def rollback(self) -> None:
+        self._conn.rollback()
+
+    def close(self) -> None:
+        self._conn.close()
 
 
 def ensure_apply_meta_table(conn, meta_table: str) -> None:
@@ -211,10 +171,103 @@ def ensure_apply_meta_table(conn, meta_table: str) -> None:
         ) from (create_err or probe_err)
 
 
+def _apply_unit(conn, table: str, xid: str, scn: int, stmts, gate: int,
+                meta_table: str | None) -> tuple[str, str]:
+    """Apply ONE (table, xid) unit as one target transaction; returns
+    its (status, error).
+
+    A unit at or below the table's SCN gate is 'skipped' untouched; a
+    comment-only unit (UNTRANSLATABLE quarantine) is 'skipped' with
+    its comment as the error. With ``meta_table`` a unit whose
+    (table, xid, commit_scn) row already exists on the target is
+    'skipped' too, and an applied unit inserts that row in the SAME
+    transaction as its data. Any statement failure rolls the whole
+    unit back and reports it 'failed' — never raises."""
+    if scn <= gate:
+        return "skipped", ""
+    runnable = [
+        s2
+        for s2 in (s.strip().rstrip(";").strip() for s in stmts)
+        if s2 and not s2.startswith("--")
+    ]
+    if not runnable:
+        return "skipped", "; ".join(stmts)[:500]
+    if meta_table:
+        # target-side exactly-once probe: committed by a prior attempt
+        # of this very unit?
+        cur = conn.cursor()
+        try:
+            cur.execute(
+                f"SELECT 1 FROM {meta_table} WHERE table_name = {_sql_str(table)} "
+                f"AND xid = {_sql_str(xid)} AND commit_scn = {scn}"
+            )
+            seen = cur.fetchone() is not None
+        finally:
+            cur.close()
+        _safe_rollback(conn)  # end the read txn cleanly
+        if seen:
+            return "skipped", ALREADY_APPLIED
+    try:
+        cur = conn.cursor()
+        try:
+            for s in runnable:
+                cur.execute(s)
+            if meta_table:
+                # same-transaction checkpoint row — commits or rolls
+                # back WITH the data
+                cur.execute(
+                    f"INSERT INTO {meta_table} (table_name, xid, commit_scn) "
+                    f"VALUES ({_sql_str(table)}, {_sql_str(xid)}, {scn})"
+                )
+        finally:
+            cur.close()
+        conn.commit()
+        return "applied", ""
+    except Exception as e:  # noqa: BLE001 — rollback + quarantine
+        _safe_rollback(conn)
+        return "failed", error_line(e)
+
+
+def _apply_units(units, connect, gates: dict[str, int], meta_table: str | None) -> list[dict]:
+    """Apply (table_name, xid, commit_scn, stmts) units in order over
+    ONE lazily opened connection; one status row per unit."""
+    pid = os.getpid()
+    out: list[dict] = []
+    conn = None
+    try:
+        for table, xid, scn, stmts in units:
+            scn = int(scn)
+            if conn is None:
+                conn = connect()
+                if meta_table:
+                    ensure_apply_meta_table(conn, meta_table)
+            status, error = _apply_unit(
+                conn, table, xid, scn, list(stmts), gates.get(table, -1), meta_table
+            )
+            out.append(dict(zip(APPLY_STATUS_COLUMNS, (table, xid, scn, status, error, pid))))
+    finally:
+        if conn is not None:
+            conn.close()
+    return out
+
+
+def _table_units(
+    changes: DataFrame, target_schema: str, dialect: str, num_partitions: int | None
+) -> DataFrame:
+    """(table_name, xid, commit_scn, stmts) apply units, repartitioned
+    BY TABLE and commit-SCN-sorted within each partition."""
+    units = translate_transactions_df(
+        group_table_transactions(changes), target_schema, dialect=dialect
+    )
+    n = num_partitions or units.sparkSession.sparkContext.defaultParallelism
+    return units.repartition(n, "table_name").sortWithinPartitions(
+        "table_name", "commit_scn", "xid"
+    )
+
+
 def apply_changes_distributed(
     changes: DataFrame,
     connect,
-    resume_scn: int = -1,
     target_schema: str = "",
     dialect: str = "ansi",
     num_partitions: int | None = None,
@@ -225,7 +278,7 @@ def apply_changes_distributed(
     row data at all. ``connect`` is a zero-arg factory returning a
     DBAPI connection (psycopg2/pymysql/sqlite3…), cloudpickled to the
     executors; each partition opens ONE connection and applies its
-    transactions in commit-SCN order.
+    units in commit-SCN order.
 
     Ordering contract (the reference's own, apply.go:58-77 — its
     worker map is keyed by TABLE and its SCN checkpoint is per-table):
@@ -237,149 +290,39 @@ def apply_changes_distributed(
 
     Returns the (table_name, xid, commit_scn, status, error,
     worker_pid) status relation — the ONLY thing that should ever be
-    collected; aggregate max(commit_scn) WHERE status='applied' per
-    table for the checkpoint (per-table incr_sync_meta semantics).
-    Each txn is committed whole or rolled back whole; units at or
-    below the resume SCN are reported 'skipped' without touching the
-    target. ``resume_scns`` is the per-TABLE gate ({table: high_scn},
-    the incr_sync_meta TableScnS shape produced by
-    distributed_apply_high_scns); the scalar ``resume_scn`` remains as
-    a global floor applied to every table.
+    collected; safe_table_watermarks turns it into the per-table
+    checkpoint. ``resume_scns`` is the per-TABLE gate ({table:
+    high_scn}, IncrSyncMeta.highs()); units at or below it are
+    reported 'skipped' without touching the target.
 
     ``meta_table`` (exactly-once hardening): when set, each applied
-    transaction ALSO inserts its (table, xid, commit_scn) row into
-    this TARGET-side meta table inside the SAME DBAPI transaction —
-    the reference's incr_sync_meta stance, where the checkpoint lives
-    in the target database, not beside the driver. A Spark task retry,
+    unit ALSO inserts its (table, xid, commit_scn) row into this
+    TARGET-side meta table inside the SAME transaction — the
+    reference's incr_sync_meta stance, where the checkpoint lives in
+    the target database, not beside the driver. A Spark task retry,
     speculative duplicate, or stage recomputation that re-runs a
-    partition after some transactions committed finds their meta rows
-    (a point SELECT per unit, PK-indexed) and reports them 'skipped'
-    instead of re-executing — the file/StateStore checkpoint alone
-    cannot gate these, because it only advances after the batch.
-    Without ``meta_table`` the apply is at-least-once under task
-    retries (disable spark.speculation for this stage)."""
-    units = translate_transactions_df(
-        group_table_transactions(changes), target_schema, dialect=dialect
-    )
-    n = num_partitions or units.sparkSession.sparkContext.defaultParallelism
-    parts = units.repartition(n, "table_name").sortWithinPartitions(
-        "table_name", "commit_scn", "xid"
-    )
-
+    partition after some units committed finds their meta rows (a
+    point SELECT per unit, PK-indexed) and reports them 'skipped'
+    instead of re-executing — the driver-side checkpoint alone cannot
+    gate these, because it only advances after the batch. Without
+    ``meta_table`` the apply is at-least-once under task retries
+    (disable spark.speculation for this stage)."""
+    parts = _table_units(changes, target_schema, dialect, num_partitions)
     gates = dict(resume_scns or {})
 
     def apply_partition(batches):
-        import os as _os
-
         import pandas as pd
 
-        pid = _os.getpid()
-        conn = None
-        try:
-            for pdf in batches:
-                if len(pdf) and conn is None:
-                    conn = connect()
-                    if meta_table:
-                        ensure_apply_meta_table(conn, meta_table)
-                out = []
-                for i in range(len(pdf)):
-                    r = pdf.iloc[i]
-                    scn = int(r["commit_scn"])
-                    if scn <= max(resume_scn, gates.get(r["table_name"], -1)):
-                        out.append((r["table_name"], r["xid"], scn, "skipped", "", pid))
-                        continue
-                    runnable = [
-                        s2
-                        for s2 in (s.strip().rstrip(";").strip() for s in r["stmts"])
-                        if s2 and not s2.startswith("--")
-                    ]
-                    if not runnable:
-                        # comment-only unit (UNTRANSLATABLE quarantine)
-                        out.append(
-                            (r["table_name"], r["xid"], scn, "skipped",
-                             "; ".join(r["stmts"])[:500], pid)
-                        )
-                        continue
-                    if meta_table:
-                        # target-side exactly-once probe: committed by a
-                        # prior attempt of this very partition?
-                        cur = conn.cursor()
-                        try:
-                            cur.execute(
-                                f"SELECT 1 FROM {meta_table} WHERE "
-                                f"table_name = {_sql_str(r['table_name'])} AND "
-                                f"xid = {_sql_str(r['xid'])} AND commit_scn = {scn}"
-                            )
-                            seen = cur.fetchone() is not None
-                        finally:
-                            cur.close()
-                        _safe_rollback(conn)  # end the read txn cleanly
-                        if seen:
-                            out.append(
-                                (r["table_name"], r["xid"], scn, "skipped",
-                                 "already applied (target meta)", pid)
-                            )
-                            continue
-                    try:
-                        cur = conn.cursor()
-                        try:
-                            for s in runnable:
-                                cur.execute(s)
-                            if meta_table:
-                                # same-transaction checkpoint row — commits
-                                # or rolls back WITH the data
-                                cur.execute(
-                                    f"INSERT INTO {meta_table} "
-                                    "(table_name, xid, commit_scn) VALUES ("
-                                    f"{_sql_str(r['table_name'])}, "
-                                    f"{_sql_str(r['xid'])}, {scn})"
-                                )
-                        finally:
-                            cur.close()
-                        conn.commit()
-                        out.append((r["table_name"], r["xid"], scn, "applied", "", pid))
-                    except Exception as e:  # noqa: BLE001 — rollback + quarantine
-                        conn.rollback()
-                        out.append(
-                            (
-                                r["table_name"],
-                                r["xid"],
-                                scn,
-                                "failed",
-                                str(e).splitlines()[0][:500],
-                                pid,
-                            )
-                        )
-                yield pd.DataFrame(
-                    out,
-                    columns=[
-                        "table_name",
-                        "xid",
-                        "commit_scn",
-                        "status",
-                        "error",
-                        "worker_pid",
-                    ],
-                )
-        finally:
-            if conn is not None:
-                conn.close()
+        units = (
+            u
+            for pdf in batches
+            for u in zip(pdf["table_name"], pdf["xid"], pdf["commit_scn"], pdf["stmts"])
+        )
+        rows = _apply_units(units, connect, gates, meta_table)
+        if rows:
+            yield pd.DataFrame(rows, columns=APPLY_STATUS_COLUMNS)
 
     return parts.mapInPandas(apply_partition, schema=APPLY_STATUS_SCHEMA)
-
-
-def distributed_apply_high_scns(status: DataFrame) -> DataFrame:
-    """Per-table applied high-water — the rows to persist as the
-    per-table SCN checkpoint (reference incr_sync_meta TableScnS).
-
-    NOTE: prefer distributed_apply_watermarks / safe_table_watermarks,
-    which refuse to advance a table's SCN past a FAILED transaction —
-    this raw max(applied) would gate a failed txn out of the replay."""
-    return (
-        status.where(F.col("status") == "applied")
-        .groupBy("table_name")
-        .agg(F.max("commit_scn").alias("high_scn"))
-    )
 
 
 def safe_table_watermarks(status_rows) -> tuple[dict[str, int], list[dict]]:
@@ -400,169 +343,142 @@ def safe_table_watermarks(status_rows) -> tuple[dict[str, int], list[dict]]:
     errors: list[dict] = []
     for r in status_rows:
         t, scn = r["table_name"], int(r["commit_scn"])
-        if r["status"] == "applied" or r["error"] == "already applied (target meta)":
+        if r["status"] == "applied" or r["error"] == ALREADY_APPLIED:
             # a target-meta skip is PROOF of a prior commit — count it,
             # so a replayed batch lets the checkpoint catch up past
             # units a held watermark forced it to revisit
             max_applied[t] = max(max_applied.get(t, -1), scn)
-        elif r["status"] == "failed":
+            continue
+        if r["status"] == "failed":
             min_failed[t] = min(min_failed.get(t, scn), scn)
-            errors.append(
-                {
-                    "table_name": t,
-                    "xid": r["xid"],
-                    "commit_scn": scn,
-                    "status": r["status"],
-                    "error": r["error"],
-                }
-            )
-        elif r["error"]:  # quarantined (untranslatable) — log, don't hold SCN
-            errors.append(
-                {
-                    "table_name": t,
-                    "xid": r["xid"],
-                    "commit_scn": scn,
-                    "status": r["status"],
-                    "error": r["error"],
-                }
-            )
+        elif not r["error"]:
+            continue  # SCN-gated skip
+        # failed, or quarantined (untranslatable) — log; only a failure
+        # holds the SCN
+        errors.append(
+            {
+                "table_name": t,
+                "xid": r["xid"],
+                "commit_scn": scn,
+                "status": r["status"],
+                "error": r["error"],
+            }
+        )
     highs = {}
     for t, h in max_applied.items():
         highs[t] = min(h, min_failed[t] - 1) if t in min_failed else h
     return {t: h for t, h in highs.items() if h >= 0}, errors
 
 
-def run_redo_apply_stream_dbapi(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    connect,
-    meta=None,
+def apply_redo_batch(
+    batch: DataFrame,
+    target,
+    meta: IncrSyncMeta,
     target_schema: str = "",
     dialect: str = "ansi",
     num_partitions: int | None = None,
-    available_now: bool = True,
     meta_table: str | None = None,
     on_error: str = "halt",
-):
-    """The fully DISTRIBUTED live loop: a JSON-lines redo feed streams
-    through executor-side parse → per-table transaction grouping →
-    per-partition DBAPI apply; the driver touches only the per-table
-    status/SCN rows (ONE collect of the tiny status relation per
-    batch — bounded by the batch's transaction count, never row data).
+) -> list:
+    """One micro-batch of (scn, xid, sql_redo) rows, steps 1-7 of the
+    module docstring; returns the status rows.
 
-    Checkpoint state (reference incr_sync_meta semantics, sync_meta_
-    incr.go): ``meta`` (state.store.IncrSyncMeta — the queryable,
-    lock-merged state table) is THE one source of truth for replay
-    gating; the legacy per-table scn_path JSON file was retired so the
-    two surfaces can never diverge. Each table's SCN advances only to
-    its CONTIGUOUS-SUCCESS watermark: a failed transaction holds its
-    table's checkpoint at min(failed commit_scn) - 1 and is persisted
-    to the append-only error log, so it replays on redelivery instead
-    of being silently gated out.
+    ``target`` picks the transport: a JdbcSink applies driver-side
+    over one py4j connection, pulling the sorted units through
+    toLocalIterator — driver memory is bounded by ONE partition of
+    translated statement text, never the batch's change payload; a
+    zero-argument DBAPI factory applies executor-side
+    (apply_changes_distributed), with ONE collect of the tiny status
+    relation — collecting twice would recompute mapInPandas and re-run
+    the apply.
 
-    ``meta_table`` (OPT-IN) adds the target-side same-transaction
-    checkpoint (see apply_changes_distributed), which makes that
-    replay — and any Spark task retry — exactly-once: the already-
-    applied units above the held watermark skip via their meta rows
-    rather than re-executing. It is opt-in because it needs DDL (or a
-    pre-created table) on the target: ensure_apply_meta_table verifies
-    usability and surfaces one clear error if the target cannot host
-    it. Without it the apply is at-least-once under task retries.
+    ``meta`` is THE source of truth for replay gating. Each table's
+    SCN advances only AFTER the apply, to its contiguous-success
+    watermark: a crash before the merge replays the batch, which the
+    gate, the rollback-whole units and (opt-in) ``meta_table`` make
+    idempotent; a failed unit holds its table's SCN and is persisted
+    to the error log, so it replays instead of being silently gated
+    out. ``meta_table`` needs DDL (or a pre-created table) on the
+    target — see apply_changes_distributed.
 
     ``on_error='halt'`` (default — the reference hard-fails on any
-    apply error) raises after persisting the error log + watermarks,
-    failing the streaming query; 'continue' quarantines and keeps
-    consuming."""
-    from transferdb_spark.state.store import IncrSyncMeta
+    apply error) raises after persisting the error log + watermarks;
+    'continue' quarantines and keeps consuming."""
+    changes = redo_stream_to_changes(batch.select("scn", "sql_redo")).join(
+        batch.select("scn", "xid"), "scn"
+    ).filter("operation <> 'ERROR'")
+    gates = meta.highs()
+    if isinstance(target, JdbcSink):
+        from transferdb_spark.catalog.jdbc_catalog import _connect
 
-    if not isinstance(meta, IncrSyncMeta):
-        raise ValueError(
-            "pass meta=IncrSyncMeta(...) — the scn_path JSON checkpoint was "
-            "retired; build an IncrSyncMeta over the same directory instead"
+        spark = batch.sparkSession
+        units = _table_units(changes, target_schema, dialect, num_partitions)
+        status = _apply_units(
+            units.toLocalIterator(),
+            lambda: _JdbcConnection(
+                _connect(spark, target.url, target.driver, target.user, target.password)
+            ),
+            gates,
+            meta_table,
         )
-
-    def read_highs() -> dict[str, int]:
-        return meta.highs()
-
-    def persist(highs: dict[str, int], errors: list[dict]) -> None:
-        if highs:
-            meta.merge(highs)
-        meta.record_errors(errors)
-
-    stream = (
-        spark.readStream.schema("scn long, xid string, sql_redo string")
-        .json(source_dir)
-    )
-
-    def sink_batch(batch: DataFrame, _batch_id: int) -> None:
-        changes = redo_stream_to_changes(batch.select("scn", "sql_redo")).join(
-            batch.select("scn", "xid"), "scn"
-        ).filter("operation <> 'ERROR'")
+    elif callable(target):
         status = apply_changes_distributed(
             changes,
-            connect,
+            target,
             target_schema=target_schema,
             dialect=dialect,
             num_partitions=num_partitions,
-            resume_scns=read_highs(),
+            resume_scns=gates,
             meta_table=meta_table,
+        ).collect()
+    else:
+        raise TypeError(
+            f"target must be a JdbcSink or a zero-argument DBAPI connection "
+            f"factory, not {type(target).__name__}"
         )
-        # ONE action: collecting twice would recompute mapInPandas and
-        # re-run the apply (the meta_table gate would absorb it, but
-        # failed txns would re-execute) — so aggregate driver-side over
-        # the collected status rows instead.
-        rows = status.collect()
-        highs, errors = safe_table_watermarks(rows)
-        persist(highs, errors)
-        failed = [e for e in errors if e["status"] == "failed"]
-        if failed and on_error == "halt":
-            raise RuntimeError(
-                f"redo apply failed for {len(failed)} transaction(s); "
-                f"first: table={failed[0]['table_name']} "
-                f"xid={failed[0]['xid']} scn={failed[0]['commit_scn']} "
-                f"error={failed[0]['error']}"
-            )
-
-    writer = stream.writeStream.foreachBatch(sink_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    highs, errors = safe_table_watermarks(status)
+    if highs:
+        meta.merge(highs)
+    meta.record_errors(errors)
+    failed = [e for e in errors if e["status"] == "failed"]
+    if failed and on_error == "halt":
+        raise RuntimeError(
+            f"redo apply failed for {len(failed)} transaction(s); "
+            f"first: table={failed[0]['table_name']} "
+            f"xid={failed[0]['xid']} scn={failed[0]['commit_scn']} "
+            f"error={failed[0]['error']}"
+        )
+    return status
 
 
 def run_redo_apply_stream(
     spark: SparkSession,
     source_dir: str,
     checkpoint_dir: str,
-    sink: JdbcSink,
-    scn_path: str,
+    target,
+    meta: IncrSyncMeta,
     target_schema: str = "",
     dialect: str = "ansi",
-    available_now: bool = True,
+    num_partitions: int | None = None,
+    meta_table: str | None = None,
     on_error: str = "halt",
 ):
     """Stream a JSON-lines redo feed ((scn, xid, sql_redo) rows, one
-    file per log drop — the LogMiner file-batch shape T1 polls) into
-    the live transactional apply. A failed transaction is persisted to
-    the error log, the checkpoint holds at the contiguous-success
-    watermark, and (default) the query halts — the reference's
-    hard-fail-on-apply-error stance (o2m incr loop)."""
-    stream = (
-        spark.readStream.schema("scn long, xid string, sql_redo string")
-        .json(source_dir)
-    )
+    file per log drop — the LogMiner file-batch shape T1 polls)
+    through apply_redo_batch into ``target`` (a JdbcSink or a DBAPI
+    connection factory), checkpointing per-table SCNs in ``meta``."""
 
     def sink_batch(batch: DataFrame, _batch_id: int) -> None:
         apply_redo_batch(
-            spark, sink, batch, scn_path, target_schema=target_schema,
-            dialect=dialect, on_error=on_error,
+            batch, target, meta, target_schema=target_schema, dialect=dialect,
+            num_partitions=num_partitions, meta_table=meta_table, on_error=on_error,
         )
 
-    writer = stream.writeStream.foreachBatch(sink_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        spark.readStream.schema("scn long, xid string, sql_redo string")
+        .json(source_dir)
+        .writeStream.foreachBatch(sink_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

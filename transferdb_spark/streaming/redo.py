@@ -573,7 +573,7 @@ def translate_stmt(
     no ANSI equivalent, so safe-mode idempotence becomes
     DELETE-full-row-match + INSERT; UPDATE emits its DELETE+INSERT
     WITHOUT BEGIN/COMMIT markers — transaction boundaries belong to
-    the executor (modes/apply.apply_transactions), matching the
+    the executor (streaming/live_apply._apply_unit), matching the
     reference where apply.go owns the txn, not the statement text.
     LOB splice maps to SUBSTR || piece || SUBSTR."""
     ansi = dialect == "ansi"
@@ -658,37 +658,6 @@ def translate_stmt(
 # transaction grouping — GTID-style ordered apply units
 
 
-def group_transactions(changes: DataFrame, xid_col: str = "xid") -> DataFrame:
-    """Group change rows into commit-ordered transactions.
-
-    LogMiner rows carry a transaction id (XID); the reference applies
-    changes transactionally in commit-SCN order (translate.go wraps
-    UPDATE as BEGIN/COMMIT units). This produces one row per
-    transaction: the SCN span, the change count, and the changes as an
-    SCN-sorted struct array — the unit a target applier replays
-    atomically, in commit_scn order across transactions.
-
-    Expression-only (groupBy + collect_list + array_sort): at scale the
-    shuffle is keyed on XID and carries each change once; per-txn
-    arrays are bounded by transaction size, which is the same bound any
-    transactional applier must hold in memory."""
-    from pyspark.sql import functions as F
-
-    change_struct = F.struct(
-        "scn", "operation", "schema_name", "table_name", "data_json", "before_json"
-    )
-    return (
-        changes.groupBy(F.col(xid_col).alias("xid"))
-        .agg(
-            F.min("scn").alias("first_scn"),
-            F.max("scn").alias("commit_scn"),
-            F.count(F.lit(1)).alias("n_changes"),
-            F.array_sort(F.collect_list(change_struct)).alias("changes"),
-        )
-        .orderBy("commit_scn", "xid")
-    )
-
-
 def group_table_transactions(changes: DataFrame, xid_col: str = "xid") -> DataFrame:
     """Per-TABLE transaction units — the reference's actual apply
     parallelism: applyOracleIncrRecord keys its worker map by table
@@ -698,9 +667,12 @@ def group_table_transactions(changes: DataFrame, xid_col: str = "xid") -> DataFr
     statements a per-table applier replays atomically, ordered across
     units by commit_scn WITHIN each table.
 
-    Same shuffle shape as group_transactions (one pass over changes,
-    keyed groupBy); the extra key just makes the apply units
-    partitionable by table so executors can own disjoint tables."""
+    One pass over changes, keyed groupBy; the table key makes the
+    apply units partitionable by table so executors can own disjoint
+    tables. Each unit carries its SCN span, change count and the
+    changes as an SCN-sorted struct array, so a per-txn array is
+    bounded by transaction size — the bound any transactional
+    applier must hold in memory."""
     from pyspark.sql import functions as F
 
     change_struct = F.struct(
@@ -728,8 +700,8 @@ def translate_transactions_df(
     txns: DataFrame, target_schema: str = "", dialect: str = "ansi"
 ) -> DataFrame:
     """Executor-side translation of grouped transactions (the output of
-    group_transactions or group_table_transactions) into target-dialect
-    statement lists — (table_name, xid, commit_scn, stmts).
+    group_table_transactions) into target-dialect statement lists —
+    (table_name, xid, commit_scn, stmts).
 
     This keeps the heavy part of the apply path (change payloads →
     SQL text) OFF the driver: the driver only ever sees the translated
@@ -744,7 +716,6 @@ def translate_transactions_df(
         import pandas as pd
 
         for pdf in batches:
-            has_tbl = "table_name" in pdf.columns
             rows = []
             for idx in range(len(pdf)):
                 r = pdf.iloc[idx]
@@ -765,7 +736,7 @@ def translate_transactions_df(
                     stmts = [f"-- UNTRANSLATABLE txn {r['xid']}: {e}"]
                 rows.append(
                     (
-                        str(r["table_name"]) if has_tbl else "",
+                        str(r["table_name"]),
                         str(r["xid"]),
                         int(r["commit_scn"]),
                         stmts,
